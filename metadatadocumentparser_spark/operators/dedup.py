@@ -83,30 +83,17 @@ def lsh_params_for(
 def with_shingles(
     df: DataFrame, id_col: str, text_col: str, k: int = SHINGLE_K
 ) -> DataFrame:
-    """id, shingle (distinct word-k-grams). Mirrors the DuckDB oracle:
-    words = split(text,' '); shingle i = words[i..i+k-1] joined by ' '."""
+    """id, shingle: one row per distinct word-k-shingle of each document —
+    the explode of shingle_array, so both share one construction."""
     from ._util import ensure_min_parallelism
 
     # The explode multiplies rows ~100-1000×; an under-split input (one
     # parquet file < maxPartitionBytes → one scan task) would run the whole
     # explode+hash map side on ONE core (see _util.ensure_min_parallelism).
     df = ensure_min_parallelism(df)
-    # Guarded: for docs with < k tokens, sequence(1, n-k+1) would
-    # DESCEND to [1, 0] and slice(..., 0, k) throws (ANSI). Short docs have
-    # no k-shingles by definition — they produce zero rows here (correct:
-    # they cannot share a k-shingle with anything).
     return df.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"CASE WHEN size(split({text_col}, ' ')) >= {k} THEN"
-                    f" transform(sequence(1, size(split({text_col}, ' ')) - {k - 1}),"
-                    f" i -> array_join(slice(split({text_col}, ' '), i, {k}), ' '))"
-                    f" ELSE array() END"
-                )
-            )
-        ).alias("shingle"),
+        F.explode(shingle_array(text_col, k)).alias("shingle"),
     )
 
 
@@ -163,14 +150,20 @@ def ngram_jaccard_pairs(
 
 
 def shingle_array(text_col: str, k: int = SHINGLE_K):
-    """The distinct word-k-shingle ARRAY of one document — exactly the
-    shingles with_shingles explodes (same split-on-single-space tokens,
-    same slice/join construction, same array_distinct), kept array-side."""
+    """The distinct word-k-shingle ARRAY of one document. Mirrors the
+    DuckDB oracle: words = split(text,' ') (empty tokens kept); shingle i
+    = words[i..i+k-1] joined by ' '. Linear time: one split, the k shifted
+    slices arrays_zip'ed, one concat_ws per position (a per-position
+    slice(split(text)) re-splits the text: O(words²)). Docs with < k
+    tokens (and NULL text) have no k-shingles: an empty array."""
+    words = f"split({text_col}, ' ')"
+    n = f"size({words}) - {k - 1}"
+    slices = ", ".join(f"slice({words}, {j + 1}, {n})" for j in range(k))
+    parts = ", ".join(f"z.`{j}`" for j in range(k))
     return F.array_distinct(
         F.expr(
-            f"CASE WHEN size(split({text_col}, ' ')) >= {k} THEN"
-            f" transform(sequence(1, size(split({text_col}, ' ')) - {k - 1}),"
-            f" i -> array_join(slice(split({text_col}, ' '), i, {k}), ' '))"
+            f"CASE WHEN {n} > 0 THEN"
+            f" transform(arrays_zip({slices}), z -> concat_ws(' ', {parts}))"
             f" ELSE array() END"
         )
     )
@@ -186,18 +179,16 @@ def minhash_signatures(
     """id + h0..h{num_hashes-1}: per-permutation minima of md5('<i>:'+shingle).
     md5-hex minima are plain lexicographic string minima — portable.
 
-    r6: the signature is a pure per-doc function, so it is computed in a
-    mapInArrow kernel (guide §2.4/§4.2). The r1-r5 form exploded ~L
-    shingle rows per doc and paid a corpus-wide groupBy(id) shuffle; an
-    intermediate array-side form (array_min over transform) removed the
-    shuffle but evaluated md5 through INTERPRETED higher-order lambdas
-    at ~30 µs/hash (16s for the 16M hashes of a 50k-doc corpus) vs ~1 µs
-    for hashlib here and for the codegen'd md5 of the old explode.
-    Python hashlib.md5 hexdigest == Spark md5() (lowercase hex) and
-    Python str minima == UTF8String binary minima on hex ASCII, so the
-    values are identical (A/B-pinned in test_minhash_kernel_equals_agg).
-    Docs with no shingles (< k tokens, incl. NULL text) produce no row,
-    exactly like the explode+groupBy form."""
+    The signature is a pure per-doc function, computed in a mapInArrow
+    kernel: an explode would pay a corpus-wide groupBy(id) shuffle, and an
+    array-side array_min(transform(...)) runs md5 through interpreted
+    lambdas at ~30 µs/hash vs ~1 µs here. Each distinct shingle is hashed
+    from a per-prefix md5 state (copy + update) and raw digests compared;
+    hex is order-preserving on equal-length digests, so only the minima
+    are hex-encoded: hashlib md5 hex == Spark md5() (A/B-pinned in
+    test_minhash_kernel_equals_agg). The states are built in the kernel
+    (hashlib objects cannot be pickled). Docs with no shingles (< k
+    tokens, NULL text) produce no row, like the explode+groupBy form."""
     import hashlib
 
     import pyarrow as pa
@@ -211,9 +202,11 @@ def minhash_signatures(
     names = [f"h{i}" for i in range(num_hashes)]
     pres = [f"{i}:".encode() for i in range(num_hashes)]
     k = shingle_k
-    md5 = hashlib.md5
+    # sorts after every 16-byte digest (an all-0xff digest is its prefix)
+    above = b"\xff" * 17
 
     def kernel(batches):
+        copies = [hashlib.md5(p).copy for p in pres]
         for batch in batches:
             texts = batch.column("t").to_pylist()
             keep = []
@@ -225,21 +218,17 @@ def minhash_signatures(
                 n = len(words) - k + 1
                 if n <= 0:
                     continue
-                seen = set()
-                mins = [None] * num_hashes
-                for i in range(n):
-                    s = " ".join(words[i : i + k])
-                    if s in seen:
-                        continue
-                    seen.add(s)
-                    sb = s.encode()
-                    for j in range(num_hashes):
-                        h = md5(pres[j] + sb).hexdigest()
-                        if mins[j] is None or h < mins[j]:
-                            mins[j] = h
+                shingles = {" ".join(words[i : i + k]).encode() for i in range(n)}
                 keep.append(di)
-                for j in range(num_hashes):
-                    cols[j].append(mins[j])
+                for col, copy in zip(cols, copies):
+                    best = above
+                    for sb in shingles:
+                        h = copy()
+                        h.update(sb)
+                        d = h.digest()
+                        if d < best:
+                            best = d
+                    col.append(best.hex())
             if not keep:
                 continue
             yield pa.RecordBatch.from_arrays(
@@ -400,6 +389,14 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     ~20 rounds instead of 10⁶; each round is two key-shuffles over the
     (shrinking) edge set. Deterministic — min() is order-free.
 
+    Stop rule: the first round whose edges form a STAR FOREST (every u
+    has exactly one out-edge, no node is both a u and a v) ends the loop.
+    The test is exact: rounds preserve connectivity and the node set, and
+    every small-star edge has u > v, so each star's root is its
+    component's minimum; and a large-star + small-star round maps such a
+    forest to itself, so it IS the fixed point a fixed-point check would
+    confirm one (skipped) round later. Labels: (u → v) ∪ (v → v).
+
     Used for dedup clustering: one keeper (the label) per near-dup cluster.
     """
     # each round's result is localCheckpoint'ed: star rounds reference their
@@ -413,49 +410,30 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    all_nodes = (
-        edges.select(F.col("u").alias("id"))
-        .unionByName(edges.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    converged = False
     for _ in range(max_iter):
-        new_edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        # converged ⇔ the edge set is a fixed point (both difference
-        # directions empty — exact, not a checksum heuristic)
-        changed = (
-            not new_edges.exceptAll(edges).isEmpty()
-            or not edges.exceptAll(new_edges).isEmpty()
+        edges = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        # star forest ⇔ no node with an out-edge has another incidence
+        ends = edges.select(F.col("u").alias("n"), F.lit(1).alias("out")).unionByName(
+            edges.select(F.col("v").alias("n"), F.lit(0).alias("out"))
         )
-        edges = new_edges
-        if not changed:
-            converged = True
-            break
-    if not converged:
-        # non-convergence must not masquerade as a result
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"large-star/small-star rounds; raise max_iter (each round "
-            f"halves the residual diameter, so this indicates max_iter "
-            f"< log2(component diameter) or a degenerate input)"
-        )
-    # fixed point is a star forest: every non-root points straight at its
-    # component minimum; roots label themselves (min-agg is defensive —
-    # at the fixed point each node has at most one outgoing edge)
-    labels = (
-        all_nodes.join(
-            edges.select(F.col("u").alias("id"), F.col("v").alias("lbl")),
-            "id",
-            "left",
-        )
-        .groupBy("id")
-        .agg(F.min(F.coalesce("lbl", F.col("id"))).alias("label"))
+        deg = ends.groupBy("n").agg(F.sum("out").alias("outs"), F.count("*").alias("d"))
+        if deg.where((F.col("outs") > 0) & (F.col("d") > 1)).isEmpty():
+            # flat plan over the checkpointed forest; the intermediate
+            # checkpoint blocks are released when their DataFrames are
+            # garbage-collected (ContextCleaner)
+            return edges.select(
+                F.col("u").alias("id"), F.col("v").alias("label")
+            ).unionByName(
+                edges.select(F.col("v").alias("id"), F.col("v").alias("label"))
+                .distinct()
+            )
+    # non-convergence must not masquerade as a result
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iter} "
+        f"large-star/small-star rounds; raise max_iter (each round "
+        f"halves the residual diameter, so this indicates max_iter "
+        f"< log2(component diameter) or a degenerate input)"
     )
-    # flat final plan (checkpointed inputs), nothing left pinned: the
-    # intermediate checkpoint blocks are released when their DataFrames
-    # are garbage-collected (ContextCleaner)
-    return labels.localCheckpoint(eager=True)
 
 
 def dedup_clusters(

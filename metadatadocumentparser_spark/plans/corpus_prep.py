@@ -148,7 +148,7 @@ def corpus_prep(
         lowq = rep.where(cond).select("id").localCheckpoint(eager=True)
         base = base.join(lowq, "id", "left_anti")
     else:
-        lowq = base.select("id").limit(0).localCheckpoint(eager=True)
+        lowq = None
 
     # ---- stage 2c (optional): classifier quality gate on the released
     # text — the pluggable-model seam (operators/classifier.py); the
@@ -164,7 +164,7 @@ def corpus_prep(
         )
         base = base.join(lowc, "id", "left_anti")
     else:
-        lowc = base.select("id").limit(0).localCheckpoint(eager=True)
+        lowc = None
 
     # ---- stage 3: whole-doc near-dup dedup (MinHash-LSH → components)
     # the dropped-id list is consumed twice (the filter chain AND the stats
@@ -245,16 +245,22 @@ def corpus_prep(
     )
 
     # stage-survivor counts in ONE action over the small post-stage tables
-    # (never a second corpus scan): left joins tag each doc's furthest stage
+    # (never a second corpus scan): left joins tag each doc's furthest stage;
+    # a disabled gate (None) tags nothing
+    stats = para.select(
+        "id",
+        (F.length("text") > 0).alias("kept_para"),
+        (F.col("n_paras") - F.col("n_kept")).alias("paras_dropped"),
+    )
+    for gate, flag in ((lowq, "is_lowq"), (lowc, "is_lowc")):
+        if gate is None:
+            stats = stats.withColumn(flag, F.lit(None).cast("boolean"))
+        else:
+            stats = stats.join(
+                gate.select("id", F.lit(True).alias(flag)), "id", "left"
+            )
     stats = (
-        para.select(
-            "id",
-            (F.length("text") > 0).alias("kept_para"),
-            (F.col("n_paras") - F.col("n_kept")).alias("paras_dropped"),
-        )
-        .join(lowq.select("id", F.lit(True).alias("is_lowq")), "id", "left")
-        .join(lowc.select("id", F.lit(True).alias("is_lowc")), "id", "left")
-        .join(dupes.select("id", F.lit(True).alias("is_dupe")), "id", "left")
+        stats.join(dupes.select("id", F.lit(True).alias("is_dupe")), "id", "left")
         .join(contaminated.select("id", F.lit(True).alias("is_contam")), "id", "left")
         .join(survivors.select("id", F.lit(True).alias("is_final")), "id", "left")
         .agg(

@@ -7,6 +7,8 @@ expressions."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from metadatadocumentparser_spark import oracle
@@ -350,6 +352,102 @@ def test_connected_components_long_chain(spark):
     assert len(got) == 201 + 3
 
 
+def _union_find_labels(edges):
+    """Reference: node -> min id of its component, over the endpoints of
+    the non-self-loop edges (self-loops alone add no node)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+_CC_GRAPHS = st.lists(
+    st.tuples(st.integers(0, 40), st.integers(0, 40)), max_size=40
+)
+
+
+@settings(max_examples=15, deadline=None)
+@example(edges=[])
+@example(edges=[(i, i + 1) for i in range(30)])                  # chain
+@example(edges=[(30 - i, 29 - i) for i in range(30)])            # chain, desc ids
+@example(edges=[(20, i) for i in range(20)])                     # star, max center
+@example(edges=[(0, 1), (1, 2), (2, 3), (3, 0), (9, 8), (8, 7), (7, 9)])  # cycles
+@example(edges=[(1, 2), (2, 1), (1, 2), (3, 3), (3, 4), (5, 5)])  # dups, self-loops
+@given(edges=_CC_GRAPHS)
+def test_connected_components_matches_union_find(spark, edges):
+    """Star-forest stop == union-find components labeled by the minimum,
+    on chains, stars, cycles, duplicate/reversed edges, self-loops and
+    the empty input."""
+    from metadatadocumentparser_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(edges, "id_a int, id_b int")
+    rows = connected_components(pairs).collect()
+    got = {r.id: r.label for r in rows}
+    assert len(rows) == len(got)  # one row per node
+    assert got == _union_find_labels(edges)
+
+
+def test_connected_components_no_confirmation_round(spark):
+    """Disjoint pairs and stars are a star forest after ONE round, so
+    max_iter=1 must converge: no extra round re-checks a known result."""
+    from metadatadocumentparser_spark.operators.dedup import connected_components
+
+    edges = [(1, 2), (3, 4), (10, 11), (10, 12), (10, 13), (25, 21), (25, 22)]
+    pairs = spark.createDataFrame(edges, "id_a int, id_b int")
+    got = {r.id: r.label for r in connected_components(pairs, max_iter=1).collect()}
+    assert got == {1: 1, 2: 1, 3: 3, 4: 3, 10: 10, 11: 10, 12: 10, 13: 10,
+                   21: 21, 22: 21, 25: 21}
+
+
+def _ref_shingles(text, k):
+    """Distinct word-k-shingles in first-occurrence order: split on single
+    spaces (empty tokens kept), k-grams re-joined by ' '."""
+    if text is None:
+        return []
+    w = text.split(" ")
+    return list(dict.fromkeys(" ".join(w[i : i + k]) for i in range(len(w) - k + 1)))
+
+
+def test_shingles_match_python_reference(spark):
+    """shingle_array and with_shingles == the Python reference on NULL,
+    empty, short, exactly-k, empty-token, repeated-shingle and long docs."""
+    import random
+
+    from metadatadocumentparser_spark.operators.dedup import shingle_array, with_shingles
+
+    rnd = random.Random(7)
+    texts = [
+        None, "", " ", "a", "a b", "a b c", "a  b", "  a b  ", "a b c d",
+        "x y z x y z x y z", "a a a a a", "naïve π token ∑",
+        " ".join(rnd.choice("abcdefgh") for _ in range(5000)),
+    ]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    for k in (1, 2, 3, 4):
+        arrs = {
+            r.id: r.s
+            for r in df.select("id", shingle_array("text", k).alias("s")).collect()
+        }
+        rows = [(r.id, r.shingle) for r in with_shingles(df, "id", "text", k=k).collect()]
+        for i, t in enumerate(texts):
+            want = _ref_shingles(t, k)
+            assert arrs[i] == want, (k, t)
+            assert sorted(s for j, s in rows if j == i) == sorted(want), (k, t)
+        assert len(rows) == len(set(rows))
+
+
 def test_stratified_sample_deterministic(spark):
     """Same rows kept across repartitioning (md5-uniform, not sampleBy's
     partition-dependent RNG); per-stratum keep rates near their targets;
@@ -377,17 +475,24 @@ def test_stratified_sample_deterministic(spark):
 
 def test_redact_pii_semantics(spark):
     """Counts on the original text, fixed email→phone→IP masking order,
-    no PII → text unchanged."""
+    no PII → text unchanged, NULL text → NULL counts and NULL text."""
     from metadatadocumentparser_spark.operators.redact import redact_pii
 
     df = spark.createDataFrame(
         [
             (1, "mail a.b+c@x-corp.io and bob@y.org call +44 123-4567 from 192.168.0.1"),
             (2, "no pii here just words 12 34"),
+            (3, None),
+            (4, "no at sign, call 1 222-3334 from 10.0.0.1"),
         ],
         "id int, text string",
     )
     got = {r.id: r for r in redact_pii(df, "id", "text").collect()}
+    assert (got[3].n_emails, got[3].n_phones, got[3].n_ips, got[3].redacted) == (
+        None, None, None, None,
+    )
+    assert (got[4].n_emails, got[4].n_phones, got[4].n_ips) == (0, 1, 1)
+    assert got[4].redacted == "no at sign, call <PHONE> from <IP>"
     assert (got[1].n_emails, got[1].n_phones, got[1].n_ips) == (2, 1, 1)
     assert got[1].redacted == "mail <EMAIL> and <EMAIL> call <PHONE> from <IP>"
     assert (got[2].n_emails, got[2].n_phones, got[2].n_ips) == (0, 0, 0)
@@ -1100,6 +1205,8 @@ def test_minhash_kernel_equals_agg(spark):
         (4, "x y z x y z x"),
         (None, "p q r s t"),  # NULL id -> present (old NULL group)
         (6, "naïve π token ∑ stream merge"),
+        (7, "a b a b a b a b a b"),  # repeated shingles
+        (8, " a  b c   d e  "),       # empty tokens
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     for nh, k in ((8, 3), (4, 2)):

@@ -6,7 +6,9 @@ What to look for (and what the engine guarantees):
   the ~0.1% of blocks passing the score threshold;
 - tpch q1: FileScan with PushedFilters + pruned ReadSchema, partial agg;
 - tpch q3: BroadcastHashJoin (dimension side), no sort-merge;
-- sessionize: single Exchange (by user_id) feeding window + agg.
+- sessionize: single Exchange (by user_id) feeding window + agg;
+- minhash_lsh: the MapInArrow signature kernel runs once (band rows are
+  checkpointed), then the band self-join reads the checkpoint.
 """
 
 from __future__ import annotations
@@ -61,7 +63,7 @@ def main():
         "cosine_topk (expect: BroadcastNestedLoopJoin, map-side score)": (
             similarity.cosine_topk(emb, emb.where(F.col("vec_id") < 2), k=3)
         ),
-        "minhash_lsh (expect: shingle agg + band self-join)": (
+        "minhash_lsh (expect: MapInArrow + checkpointed band self-join)": (
             dedup.minhash_lsh_pairs(docs, "doc_id", "text")
         ),
     }
