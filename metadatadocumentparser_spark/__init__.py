@@ -6,7 +6,7 @@ bbox/font/type, images, tables, formula detection + LaTeX heuristics,
 document metadata) re-expressed as a distributed dataflow over transcript
 tables ``(conv_id, turn_idx, role, text, tool, ts)``:
 
-- one vectorized structural parse kernel (``mapInPandas``) per turn,
+- one vectorized structural parse kernel (``mapInArrow``) per turn,
 - all classification / scoring / LaTeX / boilerplate logic as **native
   Catalyst expressions** (no per-row Python in the hot path),
 - explicit (conv_id, turn_idx) repartitioning so conversation-level skew

@@ -1,20 +1,11 @@
 """The vectorized structural parse kernel (the engine's ONE heavy UDF).
 
-``mapInPandas`` / ``mapInArrow`` over transcript rows: each Arrow batch of
-turns is parsed structurally (payload → blocks/images/tables/meta/segments
-with char spans) and returned as nested arrays — one output row per turn.
-Everything downstream (classification, formula scoring, LaTeX, boilerplate
-tree, ordering, indexes) is native Catalyst on the exploded arrays.
-
-Two physically different kernels share ONE record builder (identical
-output, golden-checked):
-- pandas kernel (mapInPandas): dict records → pandas object DataFrame →
-  Arrow (Spark's serializer does the pandas→Arrow conversion per batch).
-- arrow kernel (mapInArrow): dict records → pa.RecordBatch.from_pylist
-  directly against the derived Arrow schema — skips the pandas
-  object-DataFrame layer entirely (no block-manager, no object-dtype
-  inference on deeply nested columns). See plans/pipeline.parse_transcripts
-  (engine=...) for the measured comparison.
+``mapInArrow`` over transcript rows: each Arrow batch of turns is parsed
+structurally (payload → blocks/images/tables/meta/segments with char
+spans) and encoded straight to a ``pa.RecordBatch`` against the derived
+Arrow schema — one output row per turn. Everything downstream
+(classification, formula scoring, LaTeX, boilerplate tree, ordering,
+indexes) is native Catalyst on the exploded arrays.
 
 Scale notes:
 - per-turn independence → the kernel needs no grouping, no shuffle; it runs
@@ -27,9 +18,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
+import inspect
 
 from . import docparse, htmlseg
 
@@ -76,20 +65,15 @@ PARSED_DDL = ", ".join(
     ]
 )
 
-_OUT_COLUMNS = [
-    "conv_id", "turn_idx", "role", "tool", "ts", "html_raw", "is_html",
-    "meta", "column_layout", "blocks", "images", "tables", "segments",
-]
-
 
 def _turn_record(conv_id, turn_idx, role, tool, ts, text, parse_kwargs) -> dict:
-    """Parse ONE turn into the output-row dict (shared by both kernels).
+    """Parse ONE turn into the output-row dict.
     Returns None for a row with no usable (conv_id, turn_idx) key — the
-    schema allows NULLs there, and int(None)/int(NaN) would otherwise
-    kill the whole task (r5 review), violating the engine's
-    never-fail-the-document posture (reference parser.py:148-150
-    swallows per-stage errors; a keyless row is skipped, not fatal)."""
-    if conv_id is None or turn_idx is None or turn_idx != turn_idx:  # NaN
+    schema allows NULLs there, and int(None) would otherwise kill the
+    whole task (r5 review), violating the engine's never-fail-the-document
+    posture (reference parser.py:148-150 swallows per-stage errors; a
+    keyless row is skipped, not fatal)."""
+    if conv_id is None or turn_idx is None:
         return None
     text = text if isinstance(text, str) else ""
     parsed = docparse.parse_turn(text, **parse_kwargs)
@@ -153,90 +137,25 @@ def _turn_record(conv_id, turn_idx, role, tool, ts, text, parse_kwargs) -> dict:
     }
 
 
-def _flags(
-    text_method, layout_aware, column_aware, header_margin, footer_margin,
-    table_method, extract_text, extract_images_flag, extract_tables_flag,
-) -> dict:
-    return dict(
-        text_method=text_method,
-        layout_aware=layout_aware,
-        column_aware=column_aware,
-        header_margin=header_margin,
-        footer_margin=footer_margin,
-        table_method=table_method,
-        extract_text=extract_text,
-        extract_images_flag=extract_images_flag,
-        extract_tables_flag=extract_tables_flag,
-    )
-
-
-def make_parse_kernel(
-    text_method: str = "pymupdf",
-    layout_aware: bool = True,
-    column_aware: bool = True,
-    header_margin: float = 50,
-    footer_margin: float = 50,
-    table_method: str = "camelot",
-    extract_text: bool = True,
-    extract_images_flag: bool = True,
-    extract_tables_flag: bool = True,
-):
-    """Returns the mapInPandas function for the given parse flags (the
-    reference parse() kwargs, parser.py:56-68). Flags are plain closure
-    values — they select code paths once per batch, never per row."""
-    kw = _flags(
-        text_method, layout_aware, column_aware, header_margin, footer_margin,
-        table_method, extract_text, extract_images_flag, extract_tables_flag,
-    )
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            recs = [
-                r
-                for r in (
-                    _turn_record(*row, kw)
-                    for row in zip(
-                        pdf["conv_id"], pdf["turn_idx"], pdf["role"],
-                        pdf["tool"], pdf["ts"], pdf["text"],
-                    )
-                )
-                if r is not None
-            ]
-            yield pd.DataFrame.from_records(recs, columns=_OUT_COLUMNS)
-
-    return kernel
-
-
-def make_parse_kernel_arrow(
-    arrow_schema,
-    text_method: str = "pymupdf",
-    layout_aware: bool = True,
-    column_aware: bool = True,
-    header_margin: float = 50,
-    footer_margin: float = 50,
-    table_method: str = "camelot",
-    extract_text: bool = True,
-    extract_images_flag: bool = True,
-    extract_tables_flag: bool = True,
-):
-    """mapInArrow variant: identical records, encoded straight to a
-    pa.RecordBatch against the pre-derived schema (derive it on the driver
-    with pyspark.sql.pandas.types.to_arrow_schema — executors have no
-    session). Skips the pandas object-DataFrame layer the mapInPandas path
-    pays on both sides of the serializer."""
+def make_parse_kernel_arrow(arrow_schema, **flags):
+    """The mapInArrow function for the given parse flags (docparse.parse_turn
+    keywords — the reference parse() kwargs, parser.py:56-68). Records are
+    encoded straight to a pa.RecordBatch against the pre-derived schema
+    (derive it where the session lives, with
+    pyspark.sql.pandas.types.to_arrow_schema — executors have no session).
+    Flags are plain closure values — they select code paths once per
+    batch, never per row; an unknown flag raises here, before any task
+    runs."""
     import pyarrow as pa
 
-    kw = _flags(
-        text_method, layout_aware, column_aware, header_margin, footer_margin,
-        table_method, extract_text, extract_images_flag, extract_tables_flag,
-    )
+    inspect.signature(docparse.parse_turn).bind("", **flags)
     in_cols = ("conv_id", "turn_idx", "role", "tool", "ts", "text")
 
     def kernel(batches):
         for batch in batches:
             cols = [batch.column(c).to_pylist() for c in in_cols]
             recs = [
-                r for r in (_turn_record(*row, kw) for row in zip(*cols))
+                r for r in (_turn_record(*row, flags) for row in zip(*cols))
                 if r is not None
             ]
             yield pa.RecordBatch.from_pylist(recs, schema=arrow_schema)

@@ -18,8 +18,6 @@ oversize — the caller decides whether to split/truncate upstream).
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,48 +28,18 @@ PACKED_DDL = (
 )
 
 
-def _ffd_linear(ids, sizes, capacity: int):
-    """Reference first-fit-decreasing (the r1-r5 form): linear scan over
-    all open packs per item — O(n·packs) per shard, which made a FIXED
-    shard count super-linear in corpus size (the r6 decade sweep caught
-    pack_sequences at 26× wall for 10× rows). Kept as the A/B oracle for
-    the segment-tree form below (identical pack membership pinned by
-    test_ffd_segment_tree_equals_linear)."""
-    order = sorted(range(len(ids)), key=lambda i: (-sizes[i], ids[i]))
-    packs: list[list[int]] = []   # indexes into ids
-    totals: list[int] = []
-    for i in order:
-        s = sizes[i]
-        if s >= capacity:
-            packs.append([i])
-            totals.append(s)
-            continue
-        placed = False
-        for p in range(len(packs)):
-            if totals[p] + s <= capacity and totals[p] < capacity:
-                packs[p].append(i)
-                totals[p] += s
-                placed = True
-                break
-        if not placed:
-            packs.append([i])
-            totals.append(s)
-    return [
-        ([ids[i] for i in p], totals[k], totals[k] > capacity)
-        for k, p in enumerate(packs)
-    ]
-
-
 def _ffd(ids, sizes, capacity: int):
     """First-fit-decreasing over one shard: returns list of
     (ids, total, oversize) packs. Deterministic: sort by (-size, id).
 
     EXACT first-fit in O(n log n) (r6): a max-segment-tree over open
     packs' residual capacities answers "leftmost pack with residual ≥ s"
-    in O(log n) — the same pack the linear scan picks, so membership is
-    byte-identical (the docs_packing oracle replays it). Eligibility in
-    the linear form is totals+s ≤ cap AND totals < cap, i.e. residual ≥
-    max(s, 1) — oversize packs (negative residual) are never eligible."""
+    in O(log n) — the same pack a linear scan over all open packs picks,
+    so membership is byte-identical (the docs_packing oracle replays it;
+    tests/test_properties.py keeps the linear r1-r5 form as the
+    reference). Eligibility in the linear form is totals+s ≤ cap AND
+    totals < cap, i.e. residual ≥ max(s, 1) — oversize packs (negative
+    residual) are never eligible."""
     n = len(ids)
     order = sorted(range(n), key=lambda i: (-sizes[i], ids[i]))
     packs: list[list[int]] = []   # indexes into ids

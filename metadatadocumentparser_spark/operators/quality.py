@@ -149,10 +149,24 @@ def repetition_ngram_signals(
     top_ns: tuple[int, ...] = GOPHER_TOP_NS,
     dup_ns: tuple[int, ...] = GOPHER_DUP_NS,
 ) -> DataFrame:
-    """Gopher §A1.1 n-gram repetition suite — doc-LOCAL mapInArrow kernel
-    (r6 rewrite; the former shuffle-based form is kept verbatim as
-    repetition_ngram_signals_sql and pinned equal by
-    tests/test_units.py::test_repetition_ngram_kernel_equals_sql).
+    """Gopher §A1.1 n-gram repetition suite — doc-LOCAL mapInArrow kernel.
+    Per doc,
+
+    - ``top_{n}gram_e4`` (n in top_ns): fraction of token characters
+      covered by occurrences of the HEAVIEST n-gram — heaviest = max by
+      (count × gram-char-length, gram) so ties break deterministically;
+      coverage is positional (overlapping occurrences count a token once).
+    - ``dup_{n}gram_e4`` (n in dup_ns): fraction of token characters
+      covered by ANY n-gram occurring ≥ 2 times (positional, the published
+      "duplicated n-gram character fraction").
+
+    Char accounting uses token characters only (separators excluded from
+    numerator and denominator) — unambiguous under repeated whitespace and
+    engine-portable. Docs with < n tokens (or 0 chars) score 0 for that n.
+
+    r6 rewrite: the former shuffle-based form is the reference in
+    tests/test_units.py, pinned equal by
+    test_repetition_ngram_kernel_equals_sql.
 
     Every signal depends ONLY on the document's own tokens, so the r5
     plan — a 5-way fused gram explode, a corpus-wide (id, n, gram)
@@ -260,131 +274,6 @@ def repetition_ngram_signals(
     # one small parquet file would otherwise run the whole kernel on one
     # core (the with_shingles rationale); round-robin split first
     return ensure_min_parallelism(src).mapInArrow(kernel, schema=schema)
-
-
-def repetition_ngram_signals_sql(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    top_ns: tuple[int, ...] = GOPHER_TOP_NS,
-    dup_ns: tuple[int, ...] = GOPHER_DUP_NS,
-) -> DataFrame:
-    """The r4/r5 all-native form (one fused gram explode + (id, n, gram)
-    aggregation). Kept as the A/B oracle for the kernel form above —
-    identical output, pinned by test_repetition_ngram_kernel_equals_sql.
-    Per doc,
-
-    - ``top_{n}gram_e4`` (n in top_ns): fraction of token characters
-      covered by occurrences of the HEAVIEST n-gram — heaviest = max by
-      (count × gram-char-length, gram) so ties break deterministically;
-      coverage is positional (overlapping occurrences count a token once).
-    - ``dup_{n}gram_e4`` (n in dup_ns): fraction of token characters
-      covered by ANY n-gram occurring ≥ 2 times (positional, the published
-      "duplicated n-gram character fraction").
-
-    Char accounting uses token characters only (separators excluded from
-    numerator and denominator) — unambiguous under repeated whitespace and
-    engine-portable. Docs with < n tokens (or 0 chars) score 0 for that n.
-
-    Plan shape (r5 — was 4 shuffles + a corpus-wide token re-explode):
-    ONE gram explode for all n (array-side concat of per-n occurrence
-    structs) → one (id, n, gram) partial-aggregated count → selected
-    occurrences' positions re-aggregated to ONE row per (id, n, signal)
-    → coverage and char mass computed ARRAY-SIDE against the doc's token
-    array (sequence-expand + distinct + length fold — overlaps counted
-    once, exactly the shape the exploded/joined version produced) → one
-    conditional agg back to doc grain. Every shuffle keyed by (doc,
-    gram) or doc: linear, skew-free (gram cardinality bounded by doc
-    length; per-doc position lists bounded by token count)."""
-    all_ns = sorted(set(top_ns) | set(dup_ns))
-    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
-    base = df.select(F.col(id_col).alias("id"), toks.alias("toks")).withColumn(
-        "d",
-        F.aggregate(
-            "toks", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
-        ),
-    )
-
-    # one occurrence array for every n: struct(n, pos, gram)
-    per_n = [
-        F.expr(
-            f"CASE WHEN size(toks) >= {n} THEN"
-            f" transform(sequence(0, size(toks) - {n}),"
-            f" i -> struct({n} AS n, i AS pos,"
-            f" array_join(slice(toks, i + 1, {n}), ' ') AS g))"
-            f" ELSE array() END"
-        )
-        for n in all_ns
-    ]
-    occ = base.select(
-        "id", F.explode(F.flatten(F.array(*per_n))).alias("o")
-    ).select("id", F.col("o.n").alias("n"), F.col("o.pos").alias("pos"), F.col("o.g").alias("g"))
-    counts = occ.groupBy("id", "n", "g").agg(
-        F.count("*").alias("c"), F.collect_list("pos").alias("ps")
-    )
-
-    # token chars of the gram = len(g) - (n-1) single separators
-    w = (F.col("c") * (F.length("g") - (F.col("n") - 1))).cast("bigint")
-    top_sel = (
-        counts.where(F.col("n").isin(list(top_ns)))
-        .groupBy("id", "n")
-        .agg(F.max(F.struct(w.alias("w"), F.col("g"), F.col("ps"))).alias("t"))
-        .select("id", "n", F.lit("top").alias("tag"), F.col("t.ps").alias("ps"))
-    )
-    dup_sel = (
-        counts.where(F.col("n").isin(list(dup_ns)) & (F.col("c") >= 2))
-        .groupBy("id", "n")
-        .agg(F.flatten(F.collect_list("ps")).alias("ps"))
-        .select("id", "n", F.lit("dup").alias("tag"), "ps")
-    )
-
-    # coverage ARRAY-SIDE: expand each start to its n positions, distinct
-    # (overlaps count a token once), then fold the covered tokens'
-    # lengths from the doc's own token array — no corpus-wide position
-    # explode, no (id, pos) join
-    sel = (
-        top_sel.unionByName(dup_sel)
-        .join(base.select("id", "toks"), "id")
-        .select(
-            "id", "n", "tag",
-            F.aggregate(
-                F.array_distinct(
-                    F.flatten(
-                        F.transform(
-                            "ps",
-                            lambda p0: F.sequence(p0, p0 + F.col("n") - 1),
-                        )
-                    )
-                ),
-                F.lit(0).cast("bigint"),
-                lambda acc, p: acc
-                + F.length(F.element_at(F.col("toks"), p + 1)),
-            ).alias("chars"),
-        )
-    )
-    covered = sel.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when((F.col("n") == n) & (F.col("tag") == "top"), F.col("chars"))
-            ).alias(f"_top{n}")
-            for n in top_ns
-        ],
-        *[
-            F.sum(
-                F.when((F.col("n") == n) & (F.col("tag") == "dup"), F.col("chars"))
-            ).alias(f"_dup{n}")
-            for n in dup_ns
-        ],
-    )
-    out = base.select("id", "d").join(covered, "id", "left")
-    frac = lambda c: F.when(  # noqa: E731
-        F.col("d") > 0, F.coalesce(F.col(c), F.lit(0)) / F.col("d")
-    ).otherwise(F.lit(0.0))
-    return out.select(
-        "id",
-        *[half_up_scaled(frac(f"_top{n}"), 4).alias(f"top_{n}gram_e4") for n in top_ns],
-        *[half_up_scaled(frac(f"_dup{n}"), 4).alias(f"dup_{n}gram_e4") for n in dup_ns],
-    )
 
 
 def split_column(id_col, weights: dict[str, float] | None = None, salt: str = "split"):

@@ -17,8 +17,8 @@ spans for a fixed window size k:
 Plan shape (100 % native Catalyst — no Python kernel, whole-stage
 codegen end to end):
   1. tokenize: split on whitespace, drop empties (one projection);
-  2. window hashes: explode positions 0..n-k, h = md5 of the k-token
-     window joined by ' ' (flatMap — rows = total token count);
+  2. window hashes: explode positions 0..n-k, h = xxhash64 of the
+     k-token window joined by ' ' (flatMap — rows = total token count);
   3. duplicate hashes: groupBy(h).count() >= min_count — map-side
      partial agg, then a left-semi join back on h (both sides hash on h,
      the exchange is shared: two shuffles on one key);
@@ -37,11 +37,11 @@ diff n_removed == 0 instead of text equality.
 
 At 100 TB: every shuffle is linear in token count with map-side partial
 aggregation; the only superlinear-looking cost is the O(n*k) characters
-hashed per doc by the sliding md5 (k=50 -> 50x the text bytes). md5 is
-used because it is the one hash both Spark and the DuckDB oracle compute
-identically (the driver row pins every released byte); a production run
-at full scale would swap step 2 for an O(n) uint64 Karp-Rabin rolling
-hash in a mapInArrow kernel — the surrounding plan is unchanged.
+hashed per doc by the sliding window hash (k=50 -> 50x the text bytes).
+xxhash64 is JVM-native and an 8-byte shuffle key. An O(chars) Karp-Rabin
+rolling hash in a mapInArrow kernel hashes fewer bytes but pays the Python
+boundary: on long docs at k=50 it measured 12.0s against 5.0s for
+xxhash64 (OPTIMIZATION_r06.md).
 
 Reference: this is an engine addition (training-data prep); the
 reference parser has no corpus-level operators.
@@ -49,33 +49,8 @@ reference parser has no corpus-level operators.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-# Karp-Rabin bases (the fingerprint.py BASE family). _BINV is BASE's
-# multiplicative inverse mod 2^64 (BASE is odd, so it exists): it turns
-# the per-token character hashing into ONE prefix-sum pass over the
-# doc's concatenated code points — O(chars) total, independent of k.
-_BASE = np.uint64(1000003)
-_BINV = np.uint64(pow(1000003, -1, 1 << 64))
-_POW_CACHE: dict = {}
-
-
-def _pows(n: int):
-    """(BASE^i, BINV^i) for i in 0..n-1, uint64 wraparound, cached/grown."""
-    cur = _POW_CACHE.get("n", 0)
-    if n > cur:
-        m = max(n, 2 * cur, 1024)
-        with np.errstate(over="ignore"):
-            pw = np.ones(m, dtype=np.uint64)
-            pw[1:] = _BASE
-            np.cumprod(pw, out=pw)
-            iv = np.ones(m, dtype=np.uint64)
-            iv[1:] = _BINV
-            np.cumprod(iv, out=iv)
-        _POW_CACHE.update(n=m, pow=pw, binv=iv)
-    return _POW_CACHE["pow"], _POW_CACHE["binv"]
 
 
 def token_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -100,16 +75,12 @@ def token_base(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 def window_hashes(base: DataFrame, k: int) -> DataFrame:
     """(id, pos, h): xxhash64 (bigint) of every k-token window (docs
-    shorter than k emit none).
-
-    r6: h was md5-hex (a 32-char string); xxhash64 is a cheaper JVM-native
-    hash AND an 8-byte shuffle key — measured 1.1× (k=8, short docs) to
-    1.4× (k=50, 2000-token docs) on the full operator with identical
-    output rows (the hash only groups identical window TEXT; the final
-    spans are hash-free, so any 64-bit content hash yields the same
-    result modulo ~n²/2^65 collisions). window_hashes_md5 keeps the r5
-    form for A/B; NOTE a streaming substr state dir written by an md5-era
-    run is not resumable against this version (h: string → bigint)."""
+    shorter than k emit none). The hash only groups identical window
+    TEXT; the final spans are hash-free, so any 64-bit content hash yields
+    the same result modulo ~n²/2^65 collisions (tests/test_substrdedup
+    pins the operator to an md5-keyed DuckDB mirror). A streaming substr
+    index written with the r5 md5-hex h (string) is refused on read by
+    streaming/corpus_stream.py."""
     return (
         base.where(F.col("n") >= k)
         .select(
@@ -123,90 +94,6 @@ def window_hashes(base: DataFrame, k: int) -> DataFrame:
             F.xxhash64(F.concat_ws(" ", F.slice("toks", F.col("pos") + 1, k))).alias("h"),
         )
     )
-
-
-def window_hashes_md5(base: DataFrame, k: int) -> DataFrame:
-    """(id, pos, h): md5-hex of every k-token window — the r5 form, kept
-    as the cross-engine-oracle-shaped A/B reference."""
-    return (
-        base.where(F.col("n") >= k)
-        .select(
-            "id",
-            F.explode(F.sequence(F.lit(0), F.col("n") - k)).alias("pos"),
-            "toks",
-        )
-        .select(
-            "id",
-            "pos",
-            F.md5(F.concat_ws(" ", F.slice("toks", F.col("pos") + 1, k))).alias("h"),
-        )
-    )
-
-
-def window_hashes_rolling(base: DataFrame, k: int) -> DataFrame:
-    """(id, pos, h): Karp-Rabin rolling hash of every k-token window —
-    the production replacement for the md5 path (module docstring; the
-    O(n·k) md5 form hashes k× the corpus bytes, 5 PB of md5 input at
-    100 TB with the published k=50). Two levels, both content-pure:
-
-      token hash   t_i = Σ_j code_j · BASE^(L_i-1-j)   (mod 2^64)
-                   — computed for ALL tokens in O(chars) via one
-                   prefix sum with BASE⁻¹ weights (position cancels),
-      window hash  W_p = Σ_j t_(p+j) · BASE^(k-1-j)    (mod 2^64)
-                   — k vectorized passes (fingerprint.rolling_hashes'
-                   shape), numpy uint64 wraparound.
-
-    Identical downstream semantics to window_hashes: same rows, h is a
-    64-bit content hash instead of md5-hex. Two DIFFERENT windows
-    colliding (≈ n²/2^65 for n windows — ~10⁻⁸ at 10⁹ windows) could
-    merge spans; the md5 form is kept for A/B (test_substrdedup pins
-    span equality at k=8 and k=50 on a planted-overlap corpus)."""
-    src = base.where(F.col("n") >= k).select("id", "toks")
-    id_ddl = src.schema["id"].dataType.simpleString()
-
-    def kernel(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            toks_col = batch.column("toks").to_pylist()
-            idx_parts, pos_parts, h_parts = [], [], []
-            with np.errstate(over="ignore"):
-                for di, toks in enumerate(toks_col):
-                    L = len(toks)
-                    n_w = L - k + 1
-                    if n_w <= 0:
-                        continue
-                    cat = "".join(toks)
-                    codes = np.frombuffer(
-                        cat.encode("utf-32-le"), dtype=np.uint32
-                    ).astype(np.uint64)
-                    lens = np.fromiter((len(t) for t in toks), np.int64, L)
-                    ends = np.cumsum(lens)
-                    starts = ends - lens
-                    N = int(codes.size)
-                    pw, iv = _pows(max(N, k) + 1)
-                    s = np.zeros(N + 1, dtype=np.uint64)
-                    np.cumsum(codes * iv[:N], out=s[1:])
-                    th = (s[ends] - s[starts]) * pw[ends - 1]
-                    wh = np.zeros(n_w, dtype=np.uint64)
-                    for j in range(k):
-                        wh += th[j : j + n_w] * pw[k - 1 - j]
-                    idx_parts.append(np.full(n_w, di, dtype=np.int64))
-                    pos_parts.append(np.arange(n_w, dtype=np.int32))
-                    h_parts.append(wh.view(np.int64))
-            if not idx_parts:
-                continue
-            idx = np.concatenate(idx_parts)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    batch.column("id").take(pa.array(idx)),
-                    pa.array(np.concatenate(pos_parts)),
-                    pa.array(np.concatenate(h_parts)),
-                ],
-                names=["id", "pos", "h"],
-            )
-
-    return src.mapInArrow(kernel, schema=f"id {id_ddl}, pos int, h bigint")
 
 
 def merge_window_spans(dwin: DataFrame, k: int) -> DataFrame:
@@ -262,7 +149,6 @@ def exact_substring_dedup(
     text_col: str,
     k: int = 50,
     min_count: int = 2,
-    hash_method: str = "xxh64",
 ) -> DataFrame:
     """(id, text_dedup, n_tokens, n_removed, n_spans, spans): text with
     every duplicated >= k-token span removed (ALL occurrences — Lee et
@@ -278,22 +164,8 @@ def exact_substring_dedup(
         raise ValueError(
             f"exact_substring_dedup: min_count must be >= 2, got {min_count}"
         )
-    if hash_method not in ("xxh64", "rolling", "md5"):
-        raise ValueError(
-            f"exact_substring_dedup: unknown hash_method {hash_method!r}"
-        )
     base = token_base(df, id_col, text_col)
-    # "xxh64" (default): JVM-native, 8-byte shuffle key — fastest at every
-    # measured scale; "rolling": the O(chars) Karp-Rabin mapInArrow kernel
-    # (k-independent hashing, but pays the Python boundary — see
-    # OPTIMIZATION_r06.md for the measured comparison); "md5": the r5
-    # cross-engine-oracle-shaped reference. All three produce identical
-    # spans (A/B-pinned in test_substrdedup at k=8 and k=50).
-    wins = {
-        "xxh64": window_hashes,
-        "md5": window_hashes_md5,
-        "rolling": window_hashes_rolling,
-    }[hash_method](base, k)
+    wins = window_hashes(base, k)
     dup = wins.groupBy("h").count().where(F.col("count") >= min_count).select("h")
     dwin = wins.join(dup, "h", "left_semi").select("id", "pos")
     return cut_spans(base, merge_window_spans(dwin, k))

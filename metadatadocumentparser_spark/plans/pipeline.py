@@ -2,7 +2,7 @@
 
     read transcripts
       → repartition(conv_id, turn_idx)        # turn-level keys ⇒ no conv skew
-      → structural parse kernel (mapInPandas) # the ONE Python stage
+      → structural parse kernel (mapInArrow)  # the ONE Python stage
       → native classify / score / LaTeX / boilerplate tree
       → exploded output tables (blocks, formulas, images, tables, meta,
         segments) + per-turn main-content text with char spans
@@ -24,7 +24,7 @@ from ..functions.classify import classify_block_type
 from ..functions.formula import formula_score_cols, is_formula_candidate, stripped_text
 from ..functions.htmlmeta import html_author, html_date, html_title
 from ..functions.latex import latex_heuristic
-from ..kernels import PARSED_DDL, make_parse_kernel, make_parse_kernel_arrow
+from ..kernels import PARSED_DDL, make_parse_kernel_arrow
 
 _TURN_KEY = ("conv_id", "turn_idx")
 
@@ -42,7 +42,6 @@ def parse_transcripts(
     extract_tables_flag: bool = True,
     num_partitions: int | None = None,
     repartition: str | bool = "auto",
-    engine: str = "arrow",
 ) -> DataFrame:
     """Raw transcripts → parsed nested rows (kernel output).
 
@@ -55,13 +54,6 @@ def parse_transcripts(
         inputs that arrive clustered/bucketed by conv_id.
       - True: always shuffle to turn-level keys (skewed/bucketed inputs).
       - False: never.
-
-    engine:
-      - "arrow" (default): mapInArrow — records encoded straight to
-        pa.RecordBatch (skips the pandas object-DataFrame layer on both
-        serializer sides; measured faster on this corpus, BENCH.md r3).
-      - "pandas": mapInPandas (the r1/r2 path, kept for comparison).
-    Both kernels build the IDENTICAL records (golden-checked).
     """
     sc = df.sparkSession.sparkContext
     want = num_partitions or sc.defaultParallelism * 2
@@ -88,19 +80,15 @@ def parse_transcripts(
         extract_images_flag=extract_images_flag,
         extract_tables_flag=extract_tables_flag,
     )
-    if engine == "arrow":
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
 
-        # derive the Arrow schema on the DRIVER (needs the session) and
-        # close over it — executors cannot parse DDL
-        arrow_schema = to_arrow_schema(StructType.fromDDL(PARSED_DDL))
-        return df.mapInArrow(
-            make_parse_kernel_arrow(arrow_schema, **kw), schema=PARSED_DDL
-        )
-    if engine != "pandas":
-        raise ValueError(f"unknown engine {engine!r}")
-    return df.mapInPandas(make_parse_kernel(**kw), schema=PARSED_DDL)
+    # derive the Arrow schema here, where the session lives, and close
+    # over it — executors cannot parse DDL
+    arrow_schema = to_arrow_schema(StructType.fromDDL(PARSED_DDL))
+    return df.mapInArrow(
+        make_parse_kernel_arrow(arrow_schema, **kw), schema=PARSED_DDL
+    )
 
 
 def blocks_of(parsed: DataFrame) -> DataFrame:

@@ -68,6 +68,22 @@ def _read_or_none(spark: SparkSession, path: str):
         return None
 
 
+def _read_substr_index(spark: SparkSession, path: str):
+    """The window-hash index, or None before the first substr append. Its
+    ``h`` must be the bigint xxhash64 that operators/substrdedup.
+    window_hashes emits: an index written with the r5 md5-hex (string) h
+    would join against bigint hashes and either fail deep in the batch
+    (ANSI cast error) or, with ANSI off, silently match nothing."""
+    sidx = _read_or_none(spark, path)
+    if sidx is not None and sidx.schema["h"].dataType.simpleString() != "bigint":
+        raise ValueError(
+            f"substring index {path!r} has h of type "
+            f"{sidx.schema['h'].dataType.simpleString()}, expected bigint "
+            "(an md5-era state_dir) — start a fresh state_dir."
+        )
+    return sidx
+
+
 def streaming_corpus_prep(
     spark: SparkSession,
     input_dir: str,
@@ -234,6 +250,9 @@ def make_batch_processor(
         _check_lineage(write=False)  # fail fast on an obvious mismatch
 
     def process(batch_df, batch_id: int):
+        # refuse an incompatible substr index before anything is written
+        if substr_k is not None:
+            sidx = _read_substr_index(spark, substr_idx_dir)
         # claim the state_dir for this checkpoint lineage BEFORE any
         # state append (see _check_lineage)
         if lineage is not None and not lineage_ok["checked"]:
@@ -380,7 +399,6 @@ def make_batch_processor(
                 eager=True
             )
             wins = window_hashes(sbase, substr_k).localCheckpoint(eager=True)
-            sidx = _read_or_none(spark, substr_idx_dir)
             if sidx is not None:
                 if "batch_id" in sidx.columns:
                     sidx = sidx.where(~F.col("batch_id").eqNullSafe(F.lit(batch_id)))

@@ -636,6 +636,30 @@ def test_streaming_corpus_prep_r5_review_guards(spark, tmp_path):
     make_batch_processor(spark, lout, lstate, lineage="ckpt-B")
 
 
+def test_streaming_corpus_prep_refuses_md5_substr_index(spark, tmp_path):
+    """A substr index written with the r5 md5-hex h (string) is refused
+    with a ValueError naming the index, before the batch writes
+    anything: joined against bigint window hashes it would otherwise
+    fail deep in the batch (ANSI) or silently match nothing."""
+    from metadatadocumentparser_spark.streaming.corpus_stream import (
+        make_batch_processor,
+    )
+
+    out, state = str(tmp_path / "mout"), str(tmp_path / "mstate")
+    spark.createDataFrame(
+        [("0cc175b9c0f1b6a831c399e269772661", 0)], "h string, batch_id bigint"
+    ).write.parquet(f"{state}/substr")
+    process = make_batch_processor(spark, out, state, substr_k=10,
+                                   lineage="ckpt-md5")
+    body = " ".join(f"m{i}" for i in range(20))
+    batch = spark.createDataFrame([(1, body, "en")],
+                                  "doc_id bigint, text string, lang string")
+    with pytest.raises(ValueError, match="substring index"):
+        process(batch, 1)
+    assert sorted(os.listdir(state)) == ["substr"]
+    assert not os.path.exists(out)
+
+
 def test_streaming_corpus_prep_quality_gate(spark, tmp_path):
     """repetition_max in the streaming pipeline: planted all-duplicate-
     word docs never reach the output or the band index."""

@@ -76,8 +76,8 @@ def test_img_bytes_roundtrip():
 
 def test_null_turn_key_rows_skipped_not_fatal(spark):
     """r5 review: a NULL turn_idx (schema-legal) used to kill the whole
-    task via int(NaN)/int(None) in the kernel; keyless rows are now
-    skipped — the rest of the corpus parses, both engines."""
+    task via int(None) in the kernel; keyless rows are now skipped —
+    the rest of the corpus parses."""
     from metadatadocumentparser_spark import synth
     from metadatadocumentparser_spark.plans import parse_transcripts, turns_of
 
@@ -91,8 +91,6 @@ def test_null_turn_key_rows_skipped_not_fatal(spark):
         schema=synth.TRANSCRIPT_DDL,
     )
     n_good = df.count()
-    for engine in ("arrow", "pandas"):
-        out = turns_of(parse_transcripts(df.unionByName(bad), engine=engine,
-                                         repartition=False))
-        assert out.count() == n_good
-        assert out.where(F.col("conv_id").isNull()).count() == 0
+    out = turns_of(parse_transcripts(df.unionByName(bad), repartition=False))
+    assert out.count() == n_good
+    assert out.where(F.col("conv_id").isNull()).count() == 0

@@ -159,6 +159,38 @@ def test_ffd_packing_invariants(sizes, capacity):
     assert len(under_half) <= 1
 
 
+def _ffd_linear(ids, sizes, capacity: int):
+    """Reference first-fit-decreasing (the r1-r5 form): linear scan over
+    all open packs per item — O(n·packs) per shard, which made a FIXED
+    shard count super-linear in corpus size (the r6 decade sweep caught
+    pack_sequences at 26× wall for 10× rows). Kept as the A/B oracle for
+    the segment-tree form, operators/packing._ffd (identical pack
+    membership pinned by test_ffd_segment_tree_equals_linear)."""
+    order = sorted(range(len(ids)), key=lambda i: (-sizes[i], ids[i]))
+    packs: list[list[int]] = []   # indexes into ids
+    totals: list[int] = []
+    for i in order:
+        s = sizes[i]
+        if s >= capacity:
+            packs.append([i])
+            totals.append(s)
+            continue
+        placed = False
+        for p in range(len(packs)):
+            if totals[p] + s <= capacity and totals[p] < capacity:
+                packs[p].append(i)
+                totals[p] += s
+                placed = True
+                break
+        if not placed:
+            packs.append([i])
+            totals.append(s)
+    return [
+        ([ids[i] for i in p], totals[k], totals[k] > capacity)
+        for k, p in enumerate(packs)
+    ]
+
+
 @settings(max_examples=200, deadline=None)
 @given(
     st.lists(st.integers(0, 500), min_size=0, max_size=120),
@@ -170,7 +202,7 @@ def test_ffd_segment_tree_equals_linear(sizes, capacity):
     oversize flags and pack ORDER all equal (the docs_packing oracle
     replays FFD membership, so this is a correctness pin, not a style
     check). Includes zero sizes and size == capacity boundaries."""
-    from metadatadocumentparser_spark.operators.packing import _ffd, _ffd_linear
+    from metadatadocumentparser_spark.operators.packing import _ffd
 
     ids = list(range(100, 100 + len(sizes)))
     assert _ffd(ids, sizes, capacity) == _ffd_linear(ids, sizes, capacity)

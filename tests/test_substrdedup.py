@@ -110,8 +110,6 @@ def test_duckdb_mirror_on_corpus(spark):
     cross-doc runs: every released byte, span count and removed-token
     count match an independent SQL implementation (same windows, same
     HAVING, same gap-flag span merge, same rebuild)."""
-    import duckdb
-
     k = 8
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     planted = docs.select(
@@ -126,25 +124,24 @@ def test_duckdb_mirror_on_corpus(spark):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    got = sorted(
-        (r.id, r.text_dedup, r.n_removed, r.n_spans)
-        for r in exact_substring_dedup(planted, "doc_id", "text", k=k).collect()
-    )
+    got = _operator(planted, k)
+    assert got == _duckdb_mirror([tuple(r) for r in planted.collect()], k)
+    # the plant is live: every %4 doc lost at least the planted run
+    assert all(v[1] >= 13 for d, v in got.items() if d % 4 == 0)
+
+
+def _duckdb_mirror(rows, k):
+    """Independent DuckDB implementation of the full operator over
+    (id, text) rows: md5-keyed windows, same HAVING, same gap-flag span
+    merge, same rebuild. Returns {id: (text_dedup, n_removed, n_spans,
+    spans)}."""
+    import duckdb
 
     con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM read_parquet('/root/testdata/sf0.001/documents.parquet')"
-    )
-    exp = sorted(
-        tuple(r)
-        for r in con.execute(f"""
-WITH src AS (
-  SELECT doc_id AS id,
-         CASE WHEN doc_id % 4 = 0
-              THEN 'shared run w0 w1 w2 w3 w4 w5 w6 w7 w8 w9 end ' || text
-              ELSE text END AS text
-  FROM documents),
-t AS (SELECT id, list_filter(string_split_regex(COALESCE(text, ''), '\\s+'),
+    con.execute("CREATE TABLE src (id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO src VALUES (?, ?)", rows)
+    res = con.execute(f"""
+WITH t AS (SELECT id, list_filter(string_split_regex(COALESCE(text, ''), '\\s+'),
                              x -> x <> '') AS ts FROM src),
 nn AS (SELECT id, ts, len(ts) AS n FROM t),
 w AS (SELECT id, ts, n, unnest(range(0, n - {k} + 1)) AS pos FROM nn WHERE n >= {k}),
@@ -160,7 +157,8 @@ sp0 AS (
   FROM dw),
 sp1 AS (SELECT id, pos, SUM(newf) OVER (PARTITION BY id ORDER BY pos) AS grp FROM sp0),
 spans AS (SELECT id, grp, MIN(pos) AS s, MAX(pos) + {k} AS e FROM sp1 GROUP BY id, grp),
-agg AS (SELECT id, SUM(e - s) AS n_removed, COUNT(*) AS n_spans FROM spans GROUP BY id),
+agg AS (SELECT id, SUM(e - s) AS n_removed, COUNT(*) AS n_spans,
+               list([s, e] ORDER BY s) AS sp FROM spans GROUP BY id),
 tokpos AS (SELECT id, ts, unnest(range(1, n + 1)) AS p1 FROM nn),
 kept AS (
   SELECT tp.id, tp.p1, tp.ts[tp.p1] AS tok
@@ -170,25 +168,25 @@ kept AS (
 reb AS (SELECT id, string_agg(tok, ' ' ORDER BY p1) AS text_dedup FROM kept GROUP BY id)
 SELECT nn.id, COALESCE(reb.text_dedup, ''),
        CAST(COALESCE(agg.n_removed, 0) AS BIGINT),
-       CAST(COALESCE(agg.n_spans, 0) AS BIGINT)
+       CAST(COALESCE(agg.n_spans, 0) AS BIGINT),
+       COALESCE(agg.sp, [])
 FROM nn LEFT JOIN reb ON nn.id = reb.id LEFT JOIN agg ON nn.id = agg.id
 """).fetchall()
-    )
-    assert got == exp
-    # the plant is live: every %4 doc lost at least the planted run
-    assert all(r[2] >= 13 for r in got if r[0] % 4 == 0)
+    return {r[0]: (r[1], r[2], r[3], [tuple(p) for p in r[4]]) for r in res}
 
 
-def test_rolling_equals_md5_planted(spark):
-    """r6: the Karp-Rabin rolling-hash kernel (default) must cut the
-    exact same spans as the md5 window path — A/B at k=8 AND the
-    published k=50 on a planted-overlap corpus (VERDICT r5 'Next round'
-    #3), plus unicode tokens and intra-doc repeats."""
+def _operator(df, k):
+    return {
+        r.id: (r.text_dedup, r.n_removed, r.n_spans, [tuple(s) for s in r.spans])
+        for r in exact_substring_dedup(df, "doc_id", "text", k=k).collect()
+    }
+
+
+def test_operator_equals_duckdb_mirror_planted(spark):
+    """The operator cuts exactly the spans of the md5-keyed DuckDB mirror
+    at k=8 and the published k=50 on a planted-overlap corpus, with
+    unicode tokens, intra-doc repeats, NULL and empty text."""
     import random
-
-    from metadatadocumentparser_spark.operators.substrdedup import (
-        exact_substring_dedup,
-    )
 
     rng = random.Random(7)
     vocab = [f"w{i}" for i in range(40)] + ["π", "∑x", "naïve"]
@@ -206,16 +204,7 @@ def test_rolling_equals_md5_planted(spark):
     rows.append((1001, ""))
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     for k in (8, 50):
-        got = {}
-        for meth in ("xxh64", "rolling", "md5"):
-            got[meth] = {
-                r.id: (r.text_dedup, r.n_removed, r.n_spans, [tuple(s) for s in r.spans])
-                for r in exact_substring_dedup(
-                    df, "doc_id", "text", k=k, hash_method=meth
-                ).collect()
-            }
-        assert got["xxh64"] == got["md5"], f"k={k}"
-        assert got["rolling"] == got["md5"], f"k={k}"
-        a = got["xxh64"]
+        got = _operator(df, k)
+        assert got == _duckdb_mirror(rows, k), f"k={k}"
     # k=50: the planted 60-token run really was cut everywhere it appears
-    assert all(a[d][1] >= 11 for d in range(40) if d % 3 == 0)
+    assert all(got[d][1] >= 11 for d in range(40) if d % 3 == 0)

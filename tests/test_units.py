@@ -20,6 +20,8 @@ from metadatadocumentparser_spark.functions.formula import (
     stripped_text,
 )
 from metadatadocumentparser_spark.functions.latex import latex_heuristic
+from metadatadocumentparser_spark.functions.textstats import half_up_scaled
+from metadatadocumentparser_spark.operators import quality
 from metadatadocumentparser_spark.payload import Word
 
 
@@ -687,14 +689,126 @@ def test_review_hardening_r4(spark):
         stratified_sample(nulls, "lang", "id", {"en": 1.0}).collect()
 
 
+def repetition_ngram_signals_sql(
+    df,
+    id_col: str,
+    text_col: str,
+    top_ns: tuple[int, ...] = quality.GOPHER_TOP_NS,
+    dup_ns: tuple[int, ...] = quality.GOPHER_DUP_NS,
+):
+    """The r4/r5 all-native form of quality.repetition_ngram_signals (one
+    fused gram explode + (id, n, gram) aggregation), kept as the reference
+    the mapInArrow kernel must match byte-for-byte (signal definitions in
+    the kernel's docstring).
+
+    Plan shape (r5 — was 4 shuffles + a corpus-wide token re-explode):
+    ONE gram explode for all n (array-side concat of per-n occurrence
+    structs) → one (id, n, gram) partial-aggregated count → selected
+    occurrences' positions re-aggregated to ONE row per (id, n, signal)
+    → coverage and char mass computed ARRAY-SIDE against the doc's token
+    array (sequence-expand + distinct + length fold — overlaps counted
+    once, exactly the shape the exploded/joined version produced) → one
+    conditional agg back to doc grain. Every shuffle keyed by (doc,
+    gram) or doc: linear, skew-free (gram cardinality bounded by doc
+    length; per-doc position lists bounded by token count)."""
+    all_ns = sorted(set(top_ns) | set(dup_ns))
+    toks = F.filter(F.split(F.col(text_col), " "), lambda x: x != "")
+    base = df.select(F.col(id_col).alias("id"), toks.alias("toks")).withColumn(
+        "d",
+        F.aggregate(
+            "toks", F.lit(0).cast("bigint"), lambda acc, x: acc + F.length(x)
+        ),
+    )
+
+    # one occurrence array for every n: struct(n, pos, gram)
+    per_n = [
+        F.expr(
+            f"CASE WHEN size(toks) >= {n} THEN"
+            f" transform(sequence(0, size(toks) - {n}),"
+            f" i -> struct({n} AS n, i AS pos,"
+            f" array_join(slice(toks, i + 1, {n}), ' ') AS g))"
+            f" ELSE array() END"
+        )
+        for n in all_ns
+    ]
+    occ = base.select(
+        "id", F.explode(F.flatten(F.array(*per_n))).alias("o")
+    ).select("id", F.col("o.n").alias("n"), F.col("o.pos").alias("pos"), F.col("o.g").alias("g"))
+    counts = occ.groupBy("id", "n", "g").agg(
+        F.count("*").alias("c"), F.collect_list("pos").alias("ps")
+    )
+
+    # token chars of the gram = len(g) - (n-1) single separators
+    w = (F.col("c") * (F.length("g") - (F.col("n") - 1))).cast("bigint")
+    top_sel = (
+        counts.where(F.col("n").isin(list(top_ns)))
+        .groupBy("id", "n")
+        .agg(F.max(F.struct(w.alias("w"), F.col("g"), F.col("ps"))).alias("t"))
+        .select("id", "n", F.lit("top").alias("tag"), F.col("t.ps").alias("ps"))
+    )
+    dup_sel = (
+        counts.where(F.col("n").isin(list(dup_ns)) & (F.col("c") >= 2))
+        .groupBy("id", "n")
+        .agg(F.flatten(F.collect_list("ps")).alias("ps"))
+        .select("id", "n", F.lit("dup").alias("tag"), "ps")
+    )
+
+    # coverage ARRAY-SIDE: expand each start to its n positions, distinct
+    # (overlaps count a token once), then fold the covered tokens'
+    # lengths from the doc's own token array — no corpus-wide position
+    # explode, no (id, pos) join
+    sel = (
+        top_sel.unionByName(dup_sel)
+        .join(base.select("id", "toks"), "id")
+        .select(
+            "id", "n", "tag",
+            F.aggregate(
+                F.array_distinct(
+                    F.flatten(
+                        F.transform(
+                            "ps",
+                            lambda p0: F.sequence(p0, p0 + F.col("n") - 1),
+                        )
+                    )
+                ),
+                F.lit(0).cast("bigint"),
+                lambda acc, p: acc
+                + F.length(F.element_at(F.col("toks"), p + 1)),
+            ).alias("chars"),
+        )
+    )
+    covered = sel.groupBy("id").agg(
+        *[
+            F.sum(
+                F.when((F.col("n") == n) & (F.col("tag") == "top"), F.col("chars"))
+            ).alias(f"_top{n}")
+            for n in top_ns
+        ],
+        *[
+            F.sum(
+                F.when((F.col("n") == n) & (F.col("tag") == "dup"), F.col("chars"))
+            ).alias(f"_dup{n}")
+            for n in dup_ns
+        ],
+    )
+    out = base.select("id", "d").join(covered, "id", "left")
+    frac = lambda c: F.when(  # noqa: E731
+        F.col("d") > 0, F.coalesce(F.col(c), F.lit(0)) / F.col("d")
+    ).otherwise(F.lit(0.0))
+    return out.select(
+        "id",
+        *[half_up_scaled(frac(f"_top{n}"), 4).alias(f"top_{n}gram_e4") for n in top_ns],
+        *[half_up_scaled(frac(f"_dup{n}"), 4).alias(f"dup_{n}gram_e4") for n in dup_ns],
+    )
+
+
 def test_repetition_ngram_kernel_equals_sql(spark):
     """r6: repetition_ngram_signals is a doc-local mapInArrow kernel; the
-    former all-native shuffle form is kept as repetition_ngram_signals_sql
-    and the two must agree byte-for-byte — including NULL/empty text,
+    former all-native shuffle form (repetition_ngram_signals_sql above)
+    and the kernel must agree byte-for-byte — including NULL/empty text,
     unicode (astral) tokens, heaviest-gram ties, and single-token spam."""
     from metadatadocumentparser_spark.operators.quality import (
         repetition_ngram_signals,
-        repetition_ngram_signals_sql,
     )
 
     rows = [

@@ -1,7 +1,12 @@
 """Dump formatted physical plans for the headline queries → PLANS.md.
 
+Regenerates only the headline block of PLANS.md (everything above the
+first "## Round-" heading); the hand-written plan-audit sections below it
+are kept as they are. The bench queries are built from bench.QUERIES, the
+same definitions bench.py times.
+
 What to look for (and what the engine guarantees):
-- extraction turns: ONE MapInPandas over the scan, project-only above it —
+- extraction turns: ONE MapInArrow over the scan, project-only above it —
   zero Exchange operators; formulas add exactly one window Exchange over
   the ~0.1% of blocks passing the score threshold;
 - tpch q1: FileScan with PushedFilters + pruned ReadSchema, partial agg;
@@ -9,6 +14,8 @@ What to look for (and what the engine guarantees):
 - sessionize: single Exchange (by user_id) feeding window + agg;
 - minhash_lsh: the MapInArrow signature kernel runs once (band rows are
   checkpointed), then the band self-join reads the checkpoint.
+
+Usage: python tools/dump_plans.py
 """
 
 from __future__ import annotations
@@ -16,30 +23,30 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-from pyspark.sql import functions as F  # noqa: E402
-
+from bench import QUERIES, BenchContext  # noqa: E402
 from metadatadocumentparser_spark import synth  # noqa: E402
-from metadatadocumentparser_spark.operators import dedup, sessionize, similarity  # noqa: E402
 from metadatadocumentparser_spark.plans import formulas_of, parse_transcripts, turns_of  # noqa: E402
 from metadatadocumentparser_spark.session import get_spark  # noqa: E402
-from metadatadocumentparser_spark.sources import load_table  # noqa: E402
 
 SF = "/root/testdata/sf0.001"
+PLANS_MD = os.path.join(ROOT, "PLANS.md")
+BENCH_EXPECT = {
+    "tpch_q1": "PushedFilters + pruned ReadSchema + partial agg",
+    "tpch_q3": "BroadcastHashJoin",
+    "sessionize": "one Exchange by user_id",
+    "cosine_topk": "BroadcastNestedLoopJoin, map-side score",
+    "minhash_lsh": "MapInArrow + checkpointed band self-join",
+}
 
 
 def main():
     spark = get_spark(master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     tdf = spark.createDataFrame(synth.synth_local(4, 3), schema=synth.TRANSCRIPT_DDL)
-
-    li = load_table(spark, SF, "lineitem")
-    o = load_table(spark, SF, "orders")
-    c = load_table(spark, SF, "customer").where(F.col("c_mktsegment") == "BUILDING")
-    e = load_table(spark, SF, "events")
-    emb = load_table(spark, SF, "embeddings")
-    docs = load_table(spark, SF, "documents")
+    ctx = BenchContext(spark, SF)
 
     plans = {
         "extraction_turns (expect: zero Exchange)": turns_of(
@@ -48,25 +55,9 @@ def main():
         "extraction_formulas (expect: one window Exchange over passing rows only)": formulas_of(
             parse_transcripts(tdf, repartition=False)
         ),
-        "tpch_q1 (expect: PushedFilters + pruned ReadSchema + partial agg)": (
-            li.where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum("l_quantity").alias("s"), F.count("*").alias("n"))
-        ),
-        "tpch_q3 (expect: BroadcastHashJoin)": (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-            .groupBy("l_orderkey")
-            .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("rev"))
-        ),
-        "sessionize (expect: one Exchange by user_id)": sessionize.sessionize(e),
-        "cosine_topk (expect: BroadcastNestedLoopJoin, map-side score)": (
-            similarity.cosine_topk(emb, emb.where(F.col("vec_id") < 2), k=3)
-        ),
-        "minhash_lsh (expect: MapInArrow + checkpointed band self-join)": (
-            dedup.minhash_lsh_pairs(docs, "doc_id", "text")
-        ),
     }
+    for name, expect in BENCH_EXPECT.items():
+        plans[f"{name} (expect: {expect})"] = QUERIES[name][0](ctx)
 
     out = ["# PLANS — formatted physical plans for the headline queries\n"]
     out.append("Generated by `python tools/dump_plans.py` (sf0.001 inputs).\n")
@@ -78,9 +69,13 @@ def main():
         out.append(f"\n## {name}\n")
         out.append(f"Exchange operators: {n_exchange}\n")
         out.append("```\n" + plan.strip()[:6000] + "\n```\n")
-    with open(os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md"), "w") as f:
-        f.write("".join(out))
-    print("wrote PLANS.md")
+    with open(PLANS_MD) as f:
+        old = f.read()
+    cut = old.find("\n## Round-")
+    audits = old[cut:] if cut >= 0 else ""
+    with open(PLANS_MD, "w") as f:
+        f.write("".join(out) + audits)
+    print("wrote PLANS.md headline block")
     spark.stop()
 
 
