@@ -41,7 +41,6 @@ def main(argv=None):
         .getOrCreate()
     )
 
-    from metadatadocumentparser_spark.plans import extract_all
     from metadatadocumentparser_spark.plans.lineage import run_with_lineage
 
     if args.no_lineage:

@@ -85,3 +85,12 @@ def classify_documents(
     return src.mapInPandas(
         kernel, schema=f"id {id_ddl}, lang_pred string, quality double"
     )
+
+
+def _below_quality(
+    df: DataFrame, id_col: str, text_col: str, quality_min: float, classifier
+) -> DataFrame:
+    """(id) of docs scored below quality_min: corpus prep's classifier
+    gate (plans/corpus_prep, streaming/corpus_stream)."""
+    scored = classify_documents(df, id_col, text_col, classifier=classifier)
+    return scored.where(F.col("quality") < float(quality_min)).select("id")

@@ -101,3 +101,14 @@ def normalize_text(
         F.col("t").alias("text_norm"),
         F.coalesce(F.col("t") != F.col("t_orig"), F.lit(False)).alias("changed"),
     )
+
+
+def _normalized_docs(
+    docs: DataFrame, id_col: str, text_col: str, keep_col: str, form: str
+) -> DataFrame:
+    """Corpus prep's stage 0 (plans/corpus_prep, streaming/corpus_stream):
+    (id_col, normalized text_col, keep_col re-joined on id_col)."""
+    norm = normalize_text(docs, id_col, text_col, form=form, changed_flag=False)
+    return norm.select(
+        F.col("id").alias(id_col), F.col("text_norm").alias(text_col)
+    ).join(docs.select(F.col(id_col), F.col(keep_col)), id_col)

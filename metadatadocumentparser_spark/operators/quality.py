@@ -22,11 +22,13 @@ corpus-side tables which are never broadcast here).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.textstats import half_up_scaled
-from .dedup import SHINGLE_K, with_shingles
+from .dedup import with_shingles
 
 
 def repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -85,6 +87,16 @@ def repetition_signals(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         half_up_scaled(dup, 4).alias("dup_word_e4"),
         half_up_scaled(topf, 4).alias("top_bigram_e4"),
     )
+
+
+def _repetition_flagged(
+    df: DataFrame, id_col: str, text_col: str, thresholds: dict[str, int]
+) -> DataFrame:
+    """(id) of docs meeting ANY repetition_signals threshold: corpus
+    prep's Gopher gate (plans/corpus_prep, streaming/corpus_stream)."""
+    conds = [F.col(c) >= int(thr) for c, thr in thresholds.items()]
+    rep = repetition_signals(df, id_col, text_col)
+    return rep.where(functools.reduce(lambda a, b: a | b, conds)).select("id")
 
 
 def repetition_line_signals(

@@ -49,6 +49,8 @@ class TranscriptExtractor:
         self.footer_margin = footer_margin
         self.header_margin = header_margin
         self.fast_column_detection = fast_column_detection
+        # id(outs["parsed"]) -> (the tables parse() returned, its flags)
+        self._parses: dict = {}
 
     def parse(
         self,
@@ -82,17 +84,11 @@ class TranscriptExtractor:
         )
         if not extract_formulas:
             outs["formulas"] = outs["formulas"].limit(0)
-        # remember the method for the export surface: the exported
-        # document's extraction_method must report the method USED
-        # (r5 review — it was hardcoded "pymupdf")
-        self._last_text_method = text_method
-        # the export fast path (canonical_struct_from_parsed) replays the
-        # formula stage array-side, so it must know the parse's mode; an
-        # OCR strategy post-processes the formulas TABLE, which only the
-        # aggregate form can consume
-        self._last_strict = strict_mode
-        self._last_formulas = extract_formulas
-        self._last_ocr = ocr_strategy
+        # the export fast path re-derives every table from outs["parsed"]
+        # with this parse's flags; keyed on the parsed DataFrame, so an
+        # older outs dict exports with its own flags, not the latest ones
+        flags = (text_method, strict_mode, extract_formulas, ocr_strategy)
+        self._parses[id(outs["parsed"])] = (dict(outs), flags)
         return outs
 
     def compare_extraction_methods(self) -> dict:
@@ -105,20 +101,15 @@ class TranscriptExtractor:
         return export(self._struct(outs), format=format, delimiter=delimiter)
 
     def _struct(self, outs: dict) -> DataFrame:
-        # shuffle-free array-side build straight off the parsed table
-        # (r6) whenever the outs dict is untransformed; OCR'd formulas
-        # exist only at table grain -> aggregate form
-        if getattr(self, "_last_ocr", None) is None and "parsed" in outs:
-            return canonical_struct_from_parsed(
-                outs["parsed"],
-                extraction_method=self._method(),
-                strict_mode=getattr(self, "_last_strict", False),
-                include_formulas=getattr(self, "_last_formulas", True),
-            )
-        return canonical_struct(outs, extraction_method=self._method())
-
-    def _method(self) -> str:
-        return getattr(self, "_last_text_method", "pymupdf")
+        # shuffle-free array-side build only for outs exactly as parse()
+        # returned them; OCR'd formulas and edited tables exist only at
+        # table grain -> aggregate form, with that parse's method
+        tables, (method, strict, formulas, ocr) = self._parses.get(
+            id(outs.get("parsed")), ({}, ("pymupdf", False, True, None))
+        )
+        if tables and ocr is None and all(outs.get(k) is t for k, t in tables.items()):
+            return canonical_struct_from_parsed(outs["parsed"], method, strict, formulas)
+        return canonical_struct(outs, extraction_method=method)
 
     def compare_export_formats(self, doc_dict: dict) -> dict:
         return compare_export_formats(doc_dict)

@@ -104,13 +104,9 @@ def corpus_prep(
     # one normalize scan + one strata scan, both absorbed by the staging
     # checkpoint below)
     if normalize_form is not None:
-        from ..operators.normalize import normalize_text
+        from ..operators.normalize import _normalized_docs
 
-        docs = normalize_text(
-            docs, id_col, text_col, form=normalize_form, changed_flag=False
-        ).select(
-            F.col("id").alias(id_col), F.col("text_norm").alias(text_col)
-        ).join(docs.select(F.col(id_col), F.col(strata_col)), id_col)
+        docs = _normalized_docs(docs, id_col, text_col, strata_col, normalize_form)
 
     # ---- stage 1+2: redact, then paragraph-dedup the masked text.
     # One corpus scan; the compact (id, strata, text) result is
@@ -140,12 +136,9 @@ def corpus_prep(
     # repetition_signals column meets or exceeds any threshold, e.g.
     # {"dup_word_e4": 9000, "top_bigram_e4": 5000}. Off by default.
     if repetition_max:
-        rep = quality.repetition_signals(base, "id", "text")
-        cond = None
-        for colname, thr in repetition_max.items():
-            c = F.col(colname) >= int(thr)
-            cond = c if cond is None else (cond | c)
-        lowq = rep.where(cond).select("id").localCheckpoint(eager=True)
+        lowq = quality._repetition_flagged(
+            base, "id", "text", repetition_max
+        ).localCheckpoint(eager=True)
         base = base.join(lowq, "id", "left_anti")
     else:
         lowq = None
@@ -154,14 +147,11 @@ def corpus_prep(
     # text — the pluggable-model seam (operators/classifier.py); the
     # heuristic default keeps this stage fully native.
     if quality_min is not None:
-        from ..operators.classifier import classify_documents
+        from ..operators.classifier import _below_quality
 
-        scored = classify_documents(base, "id", "text", classifier=quality_model)
-        lowc = (
-            scored.where(F.col("quality") < float(quality_min))
-            .select("id")
-            .localCheckpoint(eager=True)
-        )
+        lowc = _below_quality(
+            base, "id", "text", quality_min, quality_model
+        ).localCheckpoint(eager=True)
         base = base.join(lowc, "id", "left_anti")
     else:
         lowc = None

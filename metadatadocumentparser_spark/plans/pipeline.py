@@ -21,12 +21,21 @@ from pyspark.sql import functions as F
 
 from ..functions.boilerplate import is_content
 from ..functions.classify import classify_block_type
-from ..functions.formula import formula_score_cols, is_formula_candidate, stripped_text
+from ..functions.formula import (
+    ALL_MATH_CHARS,
+    formula_score_cols,
+    is_formula_candidate,
+    stripped_text,
+)
 from ..functions.htmlmeta import html_author, html_date, html_title
 from ..functions.latex import latex_heuristic
 from ..kernels import PARSED_DDL, make_parse_kernel_arrow
 
 _TURN_KEY = ("conv_id", "turn_idx")
+_META_FIELDS = (
+    "title", "author", "subject", "creator", "producer", "creation_date",
+    "modification_date", "num_pages", "file_size", "page_sizes",
+)
 
 
 def parse_transcripts(
@@ -91,6 +100,13 @@ def parse_transcripts(
     )
 
 
+def _block_type(b) -> "F.Column":
+    """F1 block type of one blocks-array element (a struct column)."""
+    return classify_block_type(
+        b["bbox"], b["font_size"], b["page_height"], b["needs_classify"]
+    ).alias("block_type")
+
+
 def blocks_of(parsed: DataFrame) -> DataFrame:
     """Exploded text blocks with native block-type classification (F1)."""
     b = parsed.select(*_TURN_KEY, F.explode("blocks").alias("b"))
@@ -102,23 +118,44 @@ def blocks_of(parsed: DataFrame) -> DataFrame:
         F.col("b.text").alias("text"),
         F.col("b.font_size").alias("font_size"),
         F.col("b.font_name").alias("font_name"),
-        classify_block_type(
-            F.col("b.bbox"), F.col("b.font_size"), F.col("b.page_height"), F.col("b.needs_classify")
-        ).alias("block_type"),
+        _block_type(F.col("b")),
         F.col("b.span_start").alias("span_start"),
         F.col("b.span_end").alias("span_end"),
     )
 
 
+def _formula_cols(raw, font_size, strict_mode: bool):
+    """(passes, formula_text, confidence) of one block from its RAW text
+    (formula.py:17-169, F2 score + P7 candidate check).
+
+    Fast path: ONE translate scan over the raw text decides the
+    zero-math-char case before anything else runs. Stripping removes
+    only whitespace + \\x1c-\\x1f — none of which are in either alphabet
+    — so zero union-count on raw ⟺ zero (sym + chr) on stripped ⟹ score
+    0 (formula_score_cols' gating proof) < threshold ⟹ never passes.
+    Prose blocks (the overwhelming majority) skip the strip
+    regexp_replace and both per-alphabet translates. The CASE is lazy:
+    the P7 negative-pattern scan only runs for blocks whose score already
+    clears the threshold."""
+    t = stripped_text(raw)
+    _score, confidence, clears = formula_score_cols(t, font_size, strict_mode)
+    raw_has_math = F.length(raw) != F.length(F.translate(raw, ALL_MATH_CHARS, ""))
+    passes = F.when(
+        raw_has_math,
+        F.when(clears, is_formula_candidate(t)).otherwise(F.lit(False)),
+    ).otherwise(F.lit(False))
+    return passes, t, confidence
+
+
 def formulas_of(parsed: DataFrame, strict_mode: bool = False) -> DataFrame:
     """Formula stage (formula.py:17-169), fully native: posexplode blocks
-    (pos = block order), ONE whole-stage-codegen'd projection computing the
-    F2 score (codegen gets common-subexpression elimination — the same
-    expressions inside a higher-order-function lambda are interpreted and
-    re-evaluate translate() per reference, measured 3× slower), then the
-    W6 running formula_index as a row_number window over only the passing
-    rows (a shuffle of ~0.1% of blocks, keyed by turn — never conv)."""
-    threshold = 0.8 if strict_mode else 0.7
+    (pos = block order), ONE whole-stage-codegen'd projection of
+    _formula_cols (codegen gets common-subexpression elimination — the
+    same expressions inside a higher-order-function lambda are
+    interpreted and re-evaluate translate() per reference, measured 3×
+    slower), then the W6 running formula_index as a row_number window
+    over only the passing rows (a shuffle of ~0.1% of blocks, keyed by
+    turn — never conv)."""
     # zip only the four consumed fields (text, font_size, page_num, bbox)
     # before the posexplode — nested schema pruning cannot see through the
     # generator's struct access, but it prunes field-array extraction, so
@@ -130,25 +167,9 @@ def formulas_of(parsed: DataFrame, strict_mode: bool = False) -> DataFrame:
         F.col("blocks.bbox").alias("bbox"),
     )
     b = parsed.select(*_TURN_KEY, F.posexplode(zipped).alias("bpos", "b"))
-    raw = F.col("b.text")
-    t = stripped_text(raw)
-    score, confidence, _ = formula_score_cols(t, F.col("b.font_size"), strict_mode)
-    # r6 fast path: ONE translate scan over the RAW text decides the
-    # zero-math-char case before anything else runs. Stripping removes
-    # only whitespace + \x1c-\x1f — none of which are in either alphabet
-    # — so zero union-count on raw ⟺ zero (sym + chr) on stripped ⟹
-    # score 0 (formula_score_cols' gating proof) < threshold ⟹ never
-    # passes. Prose blocks (the overwhelming majority) skip the strip
-    # regexp_replace and both per-alphabet translates entirely.
-    from ..functions.formula import ALL_MATH_CHARS
-
-    raw_has_math = F.length(raw) != F.length(F.translate(raw, ALL_MATH_CHARS, ""))
-    # lazy CASE: the P7 negative-pattern scan only runs for blocks whose
-    # score already clears the threshold (a tiny fraction of the corpus)
-    passes = F.when(
-        raw_has_math,
-        F.when(score >= threshold, is_formula_candidate(t)).otherwise(F.lit(False)),
-    ).otherwise(F.lit(False))
+    passes, t, confidence = _formula_cols(
+        F.col("b.text"), F.col("b.font_size"), strict_mode
+    )
     passed = b.select(
         *_TURN_KEY,
         "bpos",
@@ -180,28 +201,24 @@ def tables_of(parsed: DataFrame) -> DataFrame:
     return t.select(*_TURN_KEY, "t.*")
 
 
+def _meta_fields() -> list:
+    """The 10 metadata fields in export order (parser.py:207-271); HTML
+    turns get DOM-heuristic title/author/date (native regexp_extract) in
+    place of the trailer fields."""
+    html = {"title": html_title, "author": html_author, "creation_date": html_date}
+
+    def field(name):
+        c = F.col(f"meta.{name}")
+        if name in html:
+            c = F.when(F.col("is_html"), html[name](F.col("html_raw"))).otherwise(c)
+        return c.alias(name)
+
+    return [field(n) for n in _META_FIELDS]
+
+
 def meta_of(parsed: DataFrame) -> DataFrame:
-    """Document metadata; HTML turns get DOM-heuristic title/author/date
-    (native regexp_extract) in place of the trailer fields."""
-    return parsed.select(
-        *_TURN_KEY,
-        F.when(F.col("is_html"), html_title(F.col("html_raw")))
-        .otherwise(F.col("meta.title"))
-        .alias("title"),
-        F.when(F.col("is_html"), html_author(F.col("html_raw")))
-        .otherwise(F.col("meta.author"))
-        .alias("author"),
-        F.col("meta.subject").alias("subject"),
-        F.col("meta.creator").alias("creator"),
-        F.col("meta.producer").alias("producer"),
-        F.when(F.col("is_html"), html_date(F.col("html_raw")))
-        .otherwise(F.col("meta.creation_date"))
-        .alias("creation_date"),
-        F.col("meta.modification_date").alias("modification_date"),
-        F.col("meta.num_pages").alias("num_pages"),
-        F.col("meta.file_size").alias("file_size"),
-        F.col("meta.page_sizes").alias("page_sizes"),
-    )
+    """Document metadata, one row per turn (see _meta_fields)."""
+    return parsed.select(*_TURN_KEY, *_meta_fields())
 
 
 def _classified_segments() -> "F.Column":

@@ -1,8 +1,11 @@
 """Serialization sinks (reference parser.py:207-393).
 
-- canonical_struct: K1 — the export dict as one nested struct per turn
-  (field names and nesting exactly parser.py:207-271; this schema IS the
-  golden-fixture schema).
+- canonical_struct / canonical_struct_from_parsed: K1 — the export dict
+  as one nested struct per turn (field names and nesting exactly
+  parser.py:207-271; this schema IS the golden-fixture schema). The first
+  reassembles it from the output tables, the second projects it straight
+  off the parsed table; block type, formulas and metadata come from
+  plans/pipeline.py's builders either way, so each rule is written once.
 - export_json: K2 — F.to_json natively; the reference's ``default=str``
   coercion is unnecessary because every field is already a string/number by
   schema (the casts happen at struct build time).
@@ -53,16 +56,17 @@ def _grouped(df: DataFrame, order_cols, struct_cols, alias: str) -> DataFrame:
     return df.groupBy(*_KEY).agg(inner.alias(alias))
 
 
+def _or_empty(doc: DataFrame, c: str):
+    """Array column c, or an empty array of c's own type for a turn with
+    no rows in that table."""
+    return F.coalesce(c, F.array().cast(doc.schema[c].dataType)).alias(c)
+
+
 def canonical_struct(outs: dict, extraction_method: str = "pymupdf") -> DataFrame:
     """K1: one nested row per turn from the extract_all() output dict."""
-    meta = outs["meta"].select(
-        *_KEY,
-        F.struct(
-            "title", "author", "subject", "creator", "producer",
-            "creation_date", "modification_date", "num_pages", "file_size",
-            "page_sizes",
-        ).alias("metadata"),
-    )
+    from ..plans.pipeline import _META_FIELDS
+
+    meta = outs["meta"].select(*_KEY, F.struct(*_META_FIELDS).alias("metadata"))
     blocks = _grouped(
         outs["blocks"], ["block_idx"],
         ["text", "bbox", "page_num", "font_size", "font_name", "block_type"],
@@ -91,30 +95,13 @@ def canonical_struct(outs: dict, extraction_method: str = "pymupdf") -> DataFram
         .join(formulas, list(_KEY), "left")
         .join(turns, list(_KEY), "left")
     )
-    empty = lambda ddl: F.expr(f"CAST(array() AS {ddl})")  # noqa: E731
     return doc.select(
         *_KEY,
         F.struct(
             F.col("metadata"),
-            F.coalesce(
-                "text_blocks",
-                empty("array<struct<text:string,bbox:array<double>,page_num:int,font_size:double,font_name:string,block_type:string>>"),
-            ).alias("text_blocks"),
-            F.coalesce(
-                "images",
-                empty("array<struct<image_index:int,page_num:int,bbox:array<double>,width:int,height:int,colorspace:string,ext:string>>"),
-            ).alias("images"),
-            F.coalesce(
-                "tables",
-                empty("array<struct<table_index:int,page_num:int,bbox:array<double>,data:array<array<string>>,extraction_method:string>>"),
-            ).alias("tables"),
-            F.coalesce(
-                "formulas",
-                empty("array<struct<formula_index:int,page_num:int,bbox:array<double>,formula_text:string,latex:string,confidence:double>>"),
-            ).alias("formulas"),
-            # the method that ACTUALLY produced the text (r5 review: this
-            # was hardcoded "pymupdf" even for pdfplumber parses —
-            # SURVEY ParsedDocument defines it as the method used)
+            *[_or_empty(doc, c) for c in ("text_blocks", "images", "tables", "formulas")],
+            # the method that ACTUALLY produced the text (SURVEY
+            # ParsedDocument defines it as the method used)
             F.lit(extraction_method).alias("extraction_method"),
             F.col("column_layout"),
         ).alias("document"),
@@ -127,128 +114,56 @@ def canonical_struct_from_parsed(
     strict_mode: bool = False,
     include_formulas: bool = True,
 ) -> DataFrame:
-    """K1 rebuilt ARRAY-SIDE from the parsed table (r6; the r5 PLANS.md
-    note, r5 verdict item 4): the aggregate form explodes 4 output
-    tables and pays 4 groupBy Exchanges + a 5-way join cascade to
-    reassemble what the parsed row already holds as ordered nested
-    arrays. This form is ONE shuffle-free projection: per-element
-    transforms evaluate the same native classify/formula/LaTeX
-    expressions inside array lambdas, and element order equals the
-    aggregate form's sort order by construction (block_idx / (page_num,
-    image_index) / table_index / formula_index are the emission orders).
+    """K1 built ARRAY-SIDE from the parsed table: ONE shuffle-free
+    projection, where the aggregate form explodes 4 output tables and pays
+    4 groupBy Exchanges + a 5-way join cascade to reassemble what the
+    parsed row already holds as ordered nested arrays. Element order
+    equals the aggregate form's sort order by construction (block_idx /
+    (page_num, image_index) / table_index / formula_index are the
+    emission orders).
 
-    Equality with the aggregate form is pinned by
+    The per-turn rules are plans/pipeline.py's own builders, not copies:
+    _meta_fields (metadata), _block_type (text_blocks) and _formula_cols
+    (formulas), here applied inside array lambdas instead of over
+    exploded rows. The aggregate form canonical_struct stays because an
+    outs dict can hold tables that exist only at table grain — an
+    OCR-postprocessed formulas table, or a table the caller edited — and
+    it is the reference that
     test_sinks.py::test_canonical_struct_from_parsed_equals_aggregate
-    across pymupdf/pdfplumber, strict and no-formula modes. The
-    aggregate form remains for pre-transformed outs dicts (e.g. an
-    OCR-postprocessed formulas table, which exists only at table grain).
-    """
-    from ..functions.classify import classify_block_type
-    from ..functions.formula import (
-        ALL_MATH_CHARS,
-        formula_score_cols,
-        is_formula_candidate,
-        stripped_text,
-    )
-    from ..functions.htmlmeta import html_author, html_date, html_title
+    compares this form with (pymupdf/pdfplumber, strict and no-formula
+    modes)."""
     from ..functions.latex import latex_heuristic
+    from ..plans.pipeline import _block_type, _formula_cols, _meta_fields
 
-    metadata = F.struct(
-        F.when(F.col("is_html"), html_title(F.col("html_raw")))
-        .otherwise(F.col("meta.title"))
-        .alias("title"),
-        F.when(F.col("is_html"), html_author(F.col("html_raw")))
-        .otherwise(F.col("meta.author"))
-        .alias("author"),
-        F.col("meta.subject").alias("subject"),
-        F.col("meta.creator").alias("creator"),
-        F.col("meta.producer").alias("producer"),
-        F.when(F.col("is_html"), html_date(F.col("html_raw")))
-        .otherwise(F.col("meta.creation_date"))
-        .alias("creation_date"),
-        F.col("meta.modification_date").alias("modification_date"),
-        F.col("meta.num_pages").alias("num_pages"),
-        F.col("meta.file_size").alias("file_size"),
-        F.col("meta.page_sizes").alias("page_sizes"),
-    )
+    def formula(b, i):
+        _passes, t, conf = _formula_cols(b["text"], b["font_size"], strict_mode)
+        return F.struct(
+            i.alias("formula_index"),
+            b["page_num"].alias("page_num"),
+            b["bbox"].alias("bbox"),
+            t.alias("formula_text"),
+            latex_heuristic(t).alias("latex"),
+            conf.alias("confidence"),
+        )
+
+    passes = lambda b: _formula_cols(b["text"], b["font_size"], strict_mode)[0]  # noqa: E731
+    formulas = F.transform(F.filter("blocks", passes), formula)
+    if not include_formulas:
+        formulas = F.array().cast(parsed.select(formulas).schema[0].dataType)
     text_blocks = F.transform(
         "blocks",
         lambda b: F.struct(
-            b["text"].alias("text"),
-            b["bbox"].alias("bbox"),
-            b["page_num"].alias("page_num"),
-            b["font_size"].alias("font_size"),
-            b["font_name"].alias("font_name"),
-            classify_block_type(
-                b["bbox"], b["font_size"], b["page_height"], b["needs_classify"]
-            ).alias("block_type"),
+            *[b[c].alias(c) for c in ("text", "bbox", "page_num", "font_size", "font_name")],
+            _block_type(b),
         ),
     )
-    images = F.transform(
-        "images",
-        lambda i: F.struct(
-            i["image_index"].alias("image_index"),
-            i["page_num"].alias("page_num"),
-            i["bbox"].alias("bbox"),
-            i["width"].alias("width"),
-            i["height"].alias("height"),
-            i["colorspace"].alias("colorspace"),
-            i["ext"].alias("ext"),
-        ),
-    )
-    tables = F.transform(
-        "tables",
-        lambda t: F.struct(
-            t["table_index"].alias("table_index"),
-            t["page_num"].alias("page_num"),
-            t["bbox"].alias("bbox"),
-            t["data"].alias("data"),
-            t["extraction_method"].alias("extraction_method"),
-        ),
-    )
-    if include_formulas:
-        threshold = 0.8 if strict_mode else 0.7
-
-        def _passes(b):
-            raw = b["text"]
-            t = stripped_text(raw)
-            score, _conf, _ = formula_score_cols(t, b["font_size"], strict_mode)
-            raw_has_math = F.length(raw) != F.length(
-                F.translate(raw, ALL_MATH_CHARS, "")
-            )
-            return F.when(
-                raw_has_math,
-                F.when(score >= threshold, is_formula_candidate(t)).otherwise(
-                    F.lit(False)
-                ),
-            ).otherwise(F.lit(False))
-
-        def _formula(b, i):
-            t = stripped_text(b["text"])
-            _s, conf, _ = formula_score_cols(t, b["font_size"], strict_mode)
-            return F.struct(
-                i.alias("formula_index"),
-                b["page_num"].alias("page_num"),
-                b["bbox"].alias("bbox"),
-                t.alias("formula_text"),
-                latex_heuristic(t).alias("latex"),
-                conf.alias("confidence"),
-            )
-
-        formulas = F.transform(F.filter("blocks", _passes), _formula)
-    else:
-        formulas = F.expr(
-            "CAST(array() AS array<struct<formula_index:int,page_num:int,"
-            "bbox:array<double>,formula_text:string,latex:string,"
-            "confidence:double>>)"
-        )
     return parsed.select(
         *_KEY,
         F.struct(
-            metadata.alias("metadata"),
+            F.struct(*_meta_fields()).alias("metadata"),
             text_blocks.alias("text_blocks"),
-            images.alias("images"),
-            tables.alias("tables"),
+            F.transform("images", lambda i: i.dropFields("image_bytes")).alias("images"),
+            F.col("tables"),
             formulas.alias("formulas"),
             F.lit(extraction_method).alias("extraction_method"),
             F.col("column_layout"),

@@ -46,7 +46,7 @@ permanently lose both the documents and their band-index rows
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup as _dedup
@@ -163,9 +163,9 @@ def make_batch_processor(
     calling the processor again with the same batch_id after any prefix
     of its state writes landed).
 
-    ``quality_min`` / ``quality_model``: the stateless classifier gate
-    (operators/classifier.py — same contract as the batch pipeline's),
-    applied per microbatch on the released text.
+    ``quality_min`` / ``quality_model``: the batch pipeline's stateless
+    classifier gate (operators/classifier.py), applied per microbatch on
+    the released text.
 
     ``substr_k``: ONLINE exact-substring dedup. The batch operator's
     remove-all rule is retrospective (it cuts every occurrence,
@@ -259,13 +259,9 @@ def make_batch_processor(
             _check_lineage(write=True)
         docs = batch_df.select("doc_id", "text", "lang")
         if normalize_form is not None:
-            from ..operators.normalize import normalize_text
+            from ..operators.normalize import _normalized_docs
 
-            docs = normalize_text(
-                docs, "doc_id", "text", form=normalize_form, changed_flag=False
-            ).select(F.col("id").alias("doc_id"), F.col("text_norm").alias("text")).join(
-                docs.select("doc_id", "lang"), "doc_id"
-            )
+            docs = _normalized_docs(docs, "doc_id", "text", "lang", normalize_form)
         docs = redact_pii(docs, "doc_id", "text").select(
             F.col("id").alias("doc_id"), F.col("redacted").alias("text")
         ).join(docs.select("doc_id", "lang"), "doc_id")
@@ -312,31 +308,21 @@ def make_batch_processor(
             .localCheckpoint(eager=True)
         )
 
-        # ---- optional Gopher repetition gate (stateless, same contract
-        # as plans/corpus_prep.repetition_max, on the released text)
+        # ---- optional Gopher repetition gate (stateless, the batch
+        # pipeline's stage 2b, on the released text)
         if repetition_max:
-            from ..operators.quality import repetition_signals
+            from ..operators.quality import _repetition_flagged
 
-            rep = repetition_signals(rebuilt, "doc_id", "text")
-            cond = None
-            for colname, thr in repetition_max.items():
-                c = F.col(colname) >= int(thr)
-                cond = c if cond is None else (cond | c)
-            lowq = rep.where(cond).select(F.col("id").alias("doc_id"))
-            rebuilt = rebuilt.join(lowq, "doc_id", "left_anti")
+            lowq = _repetition_flagged(rebuilt, "doc_id", "text", repetition_max)
+            rebuilt = rebuilt.join(lowq, rebuilt.doc_id == lowq.id, "left_anti")
 
         # ---- optional classifier quality gate (stateless — the batch
         # pipeline's stage 2c, heuristic default or an external model)
         if quality_min is not None:
-            from ..operators.classifier import classify_documents
+            from ..operators.classifier import _below_quality
 
-            scored = classify_documents(
-                rebuilt, "doc_id", "text", classifier=quality_model
-            )
-            lowc = scored.where(
-                F.col("quality") < float(quality_min)
-            ).select(F.col("id").alias("doc_id"))
-            rebuilt = rebuilt.join(lowc, "doc_id", "left_anti")
+            lowc = _below_quality(rebuilt, "doc_id", "text", quality_min, quality_model)
+            rebuilt = rebuilt.join(lowc, rebuilt.doc_id == lowc.id, "left_anti")
 
         # ---- incremental near-dup dedup
         bands_df = _dedup.minhash_band_rows(

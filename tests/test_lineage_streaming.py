@@ -686,3 +686,42 @@ def test_streaming_corpus_prep_quality_gate(spark, tmp_path):
     assert ids == {1}
     band_ids = {r.id for r in spark.read.parquet(f"{state}/bands").collect()}
     assert band_ids == {1}
+
+
+def test_streaming_corpus_prep_normalize_stage(spark, tmp_path):
+    """normalize_form='NFC' in the streaming pipeline, mirroring the batch
+    test_corpus_prep_normalize_stage: composed and decomposed spellings
+    of the same paragraph become byte-equal before the paragraph index
+    hashes them, so the decomposed copies dedup away and no combining
+    acute is emitted; without NFC every spelling stays distinct."""
+    from metadatadocumentparser_spark.streaming.corpus_stream import (
+        make_batch_processor,
+    )
+
+    composed, decomposed = "caf\u00e9 ", "cafe\u0301 "  # byte-different, NFC-equal
+    # doc 2k and 2k+1 carry the SAME text, spelled composed vs decomposed
+    rows = [
+        (i, (composed if i % 2 == 0 else decomposed)
+         + f"pair text body shared words here number {i // 2}", "en")
+        for i in range(40)
+    ]
+    batch = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
+
+    def run(tag, **kw):
+        out, state = str(tmp_path / f"{tag}out"), str(tmp_path / f"{tag}state")
+        make_batch_processor(spark, out, state, **kw)(batch, 0)
+        emitted = {r.doc_id: r.text for r in spark.read.parquet(out).collect()}
+        n_paras = spark.read.parquet(f"{state}/paras").select("h").distinct().count()
+        return emitted, n_paras
+
+    emitted, n_paras = run("nfc", normalize_form="NFC")
+    # each odd doc's single paragraph is byte-equal to its even
+    # partner's: the paragraph index keeps 20 hashes, not 40, and no
+    # decomposed copy survives
+    assert n_paras == 20
+    assert emitted and all(i % 2 == 0 for i in emitted)
+    assert all("caf\u00e9" in t and "\u0301" not in t for t in emitted.values())
+
+    # control: without NFC no paragraph dedups away
+    _, ctrl_paras = run("raw")
+    assert ctrl_paras == 40

@@ -321,3 +321,34 @@ def test_parser_api_export_uses_fast_path(spark):
     assert "Exchange" not in plan
     row = doc.orderBy("conv_id", "turn_idx").limit(1).collect()[0]
     assert row.document.extraction_method == "pdfplumber"
+
+
+def _json_by_turn(doc):
+    return {(r.conv_id, r.turn_idx): r.json for r in export_json(doc).collect()}
+
+
+def test_parser_api_export_uses_its_own_parse_flags(spark):
+    """An outs dict exports with the flags of the parse() that made it,
+    not those of the latest parse() call."""
+    from metadatadocumentparser_spark.parser_api import TranscriptExtractor
+
+    ex = TranscriptExtractor(_df(spark))
+    first = ex.parse(strict_mode=True, extract_formulas=True)
+    ex.parse()  # default flags: non-strict, formulas off
+    assert first["formulas"].count() > 0
+    assert _json_by_turn(ex.export_to_dict(first)) == _json_by_turn(
+        canonical_struct(first)
+    )
+
+
+def test_parser_api_export_reflects_edited_tables(spark):
+    """A table replaced after parse() is what the export serializes."""
+    from metadatadocumentparser_spark.parser_api import TranscriptExtractor
+
+    ex = TranscriptExtractor(_df(spark))
+    outs = ex.parse()
+    outs["blocks"] = outs["blocks"].where(F.col("block_idx") == 0)
+    doc = ex.export_to_dict(outs)
+    sizes = {r.n for r in doc.select(F.size("document.text_blocks").alias("n")).collect()}
+    assert sizes <= {0, 1} and 1 in sizes
+    assert _json_by_turn(doc) == _json_by_turn(canonical_struct(outs))
