@@ -6,8 +6,10 @@ jobs/extract.py ...` on multi-executor clusters).
         [--buckets 64] [--text-method pymupdf] [--strict] [--no-lineage]
 
 With lineage (default) the run is resumable: rerunning after a failure
-skips committed buckets (plans/lineage.py). Without, it is a single-pass
-extract of all output tables.
+skips committed buckets (plans/lineage.py). A resume must repeat
+``--buckets`` and ``--text-method``; a run layout that differs from the
+committed one is refused before any write. Without lineage, it is a
+single-pass extract of all output tables.
 """
 
 from __future__ import annotations

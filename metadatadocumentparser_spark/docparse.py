@@ -20,13 +20,16 @@ scoring (extractors/formula.py:76-123), LaTeX heuristic (utils.py:3-69),
 boilerplate classification. The oracle implements those independently in
 Python so the golden-equality tests genuinely exercise the native SQL.
 
-Block dicts carry char spans ``(span_start, span_end)`` into the original
-turn text plus the full per-source-span offset list.
+Block dicts carry the char span ``(span_start, span_end)`` of their
+source spans in the original turn text. The parse flags are declared once,
+as ``parse_doc``'s keywords.
 """
 
 from __future__ import annotations
 
-from .geometry import column_boxes, contains
+import inspect
+
+from .geometry import column_boxes
 from .payload import DocPayload, Page, parse_payload
 
 
@@ -51,7 +54,6 @@ def _mk_block(
         "page_height": float(page_height),
         "span_start": spans[0][0] if spans else -1,
         "span_end": spans[-1][1] if spans else -1,
-        "spans": [list(s) for s in spans],
     }
 
 
@@ -61,48 +63,16 @@ def _page_lines(page: Page):
             yield ln
 
 
-def _sorted_page_text(page: Page):
-    """Emulates page.get_text(sort=True): lines sorted (y0, x0), spans
-    concatenated, lines joined with newlines (text.py:97)."""
-    lines = sorted(_page_lines(page), key=lambda ln: (ln.bbox[1], ln.bbox[0]))
+def _lines_text(lines):
+    """Emulates page.get_text() over these lines: spans concatenated, lines
+    joined with newlines (text.py:97); plus the lines' source spans."""
     text = "\n".join("".join(s.text for s in ln.spans) for ln in lines)
-    spans = [(s.start, s.end) for ln in lines for s in ln.spans]
-    return text, spans
+    return text, [(s.start, s.end) for ln in lines for s in ln.spans]
 
 
-def _plain_page_text(page: Page):
-    """Emulates page.get_text() without sort: document order."""
-    lines = list(_page_lines(page))
-    text = "\n".join("".join(s.text for s in ln.spans) for ln in lines)
-    spans = [(s.start, s.end) for ln in lines for s in ln.spans]
-    return text, spans
-
-
-def _column_text(page: Page, col):
-    """Emulates page.get_text(clip=col_bbox, sort=True) (text.py:110):
-    lines fully inside the column rect, sorted (y0, x0)."""
-    colr = (float(col[0]), float(col[1]), float(col[2]), float(col[3]))
-    kept = [ln for ln in _page_lines(page) if contains(colr, ln.bbox)]
-    kept.sort(key=lambda ln: (ln.bbox[1], ln.bbox[0]))
-    text = "\n".join("".join(s.text for s in ln.spans) for ln in kept)
-    spans = [(s.start, s.end) for ln in kept for s in ln.spans]
-    return text, spans
-
-
-def _column_font_info(page: Page, col):
-    """Emulates the dict call over the clip (text.py:114-131): avg span size
-    (sum/len, same arithmetic order), first font name, document order."""
-    colr = (float(col[0]), float(col[1]), float(col[2]), float(col[3]))
-    sizes, names = [], []
-    for blk in page.blocks:
-        for ln in blk.lines:
-            if contains(colr, ln.bbox):
-                for s in ln.spans:
-                    sizes.append(s.size)
-                    names.append(s.font)
-    avg = sum(sizes) / len(sizes) if sizes else None
-    name = names[0] if names else None
-    return avg, name
+def _yx(ln):
+    """get_text(sort=True) line order: (y0, x0)."""
+    return ln.bbox[1], ln.bbox[0]
 
 
 def extract_pymupdf_columns(doc: DocPayload, header_margin=50, footer_margin=50):
@@ -119,7 +89,7 @@ def extract_pymupdf_columns(doc: DocPayload, header_margin=50, footer_margin=50)
         cols = column_boxes(page, header_margin=header_margin, footer_margin=footer_margin)
         if not cols:
             # Fallback: whole page, sorted (text.py:96-105)
-            text, spans = _sorted_page_text(page)
+            text, spans = _lines_text(sorted(_page_lines(page), key=_yx))
             if text.strip():
                 blocks.append(
                     _mk_block(
@@ -139,8 +109,8 @@ def extract_pymupdf_columns(doc: DocPayload, header_margin=50, footer_margin=50)
         ]
         ncols = len(colrs)
         percol = [[] for _ in range(ncols)]
-        # document order per column — exactly what _column_text collected
-        # before sorting and what _column_font_info consumed directly
+        # document order per column: the text sorts it, the font info
+        # reads it as is
         for blk in page.blocks:
             for ln in blk.lines:
                 b0, b1, b2, b3 = ln.bbox
@@ -150,13 +120,9 @@ def extract_pymupdf_columns(doc: DocPayload, header_margin=50, footer_margin=50)
                         percol[ci].append(ln)
         for ci in range(ncols):
             kept = percol[ci]
-            skept = sorted(kept, key=lambda ln: (ln.bbox[1], ln.bbox[0]))
-            col_text = "\n".join(
-                "".join(s.text for s in ln.spans) for ln in skept
-            )
+            col_text, spans = _lines_text(sorted(kept, key=_yx))
             if not col_text.strip():
                 continue
-            spans = [(s.start, s.end) for ln in skept for s in ln.spans]
             sizes, names = [], []
             for ln in kept:
                 for s in ln.spans:
@@ -201,7 +167,7 @@ def extract_pymupdf_simple(doc: DocPayload, layout_aware=True):
                     _mk_block(text, blk.bbox, page_num, avg, name, True, page.h, spans)
                 )
         else:
-            text, spans = _plain_page_text(page)
+            text, spans = _lines_text(list(_page_lines(page)))
             if text.strip():
                 blocks.append(
                     _mk_block(
@@ -404,34 +370,15 @@ def extract_blocks(
     return []
 
 
-def parse_turn(
-    text: str,
-    text_method: str = "pymupdf",
-    layout_aware: bool = True,
-    column_aware: bool = True,
-    header_margin: float = 50,
-    footer_margin: float = 50,
-    table_method: str = "camelot",
-    extract_text: bool = True,
-    extract_images_flag: bool = True,
-    extract_tables_flag: bool = True,
-):
+def parse_turn(text: str, **flags):
     """Full structural parse of one turn (the parse() plan, parser.py:56-125,
-    minus the natively-computed classify/formula stages). The extract_*
-    flags skip whole stages exactly like parse()'s kwargs (parser.py:84-114
-    — a skipped text stage also leaves column_layout unset and starves the
-    formula stage downstream).
+    minus the natively-computed classify/formula stages). ``flags`` are
+    parse_doc's keywords.
 
     Returns dict with keys: meta, blocks, images, tables, column_layout,
     extracted_text, spans, html, html_start.
     """
-    return parse_doc(parse_payload(text), len(text.encode("utf-8")),
-                     text_method=text_method, layout_aware=layout_aware,
-                     column_aware=column_aware, header_margin=header_margin,
-                     footer_margin=footer_margin, table_method=table_method,
-                     extract_text=extract_text,
-                     extract_images_flag=extract_images_flag,
-                     extract_tables_flag=extract_tables_flag)
+    return parse_doc(parse_payload(text), len(text.encode("utf-8")), **flags)
 
 
 def parse_doc(
@@ -449,7 +396,12 @@ def parse_doc(
 ):
     """parse_turn's engine over an already-built DocPayload — the seam the
     real-PDF adapter (sources/fitz_adapter.py) plugs into: any ingestion
-    path that produces DocPayload gets the full extraction pipeline."""
+    path that produces DocPayload gets the full extraction pipeline.
+
+    Its keywords are the engine's parse flags (the reference parse()
+    kwargs, parser.py:56-68). The extract_* flags skip whole stages exactly
+    like parse()'s kwargs (parser.py:84-114 — a skipped text stage also
+    leaves column_layout unset and starves the formula stage downstream)."""
     meta = extract_metadata(doc, file_size)
     blocks = (
         extract_blocks(
@@ -479,3 +431,11 @@ def parse_doc(
         "html": doc.html,
         "html_start": doc.html_start,
     }
+
+
+def parse_flags(**flags) -> dict:
+    """Every parse flag: ``flags`` bound to parse_doc's keywords (an unknown
+    one raises TypeError) with its defaults filled in."""
+    bound = inspect.signature(parse_doc).bind(None, 0, **flags)
+    bound.apply_defaults()
+    return {k: v for k, v in bound.arguments.items() if k not in ("doc", "file_size")}

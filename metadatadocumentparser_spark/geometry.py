@@ -27,14 +27,6 @@ def irect(b):
     )
 
 
-def is_empty(r) -> bool:
-    return r[0] >= r[2] or r[1] >= r[3]
-
-
-def intersect(a, b):
-    return (max(a[0], b[0]), max(a[1], b[1]), min(a[2], b[2]), min(a[3], b[3]))
-
-
 def union(a, b):
     """Union of two rects; either may be None (empty-rect identity)."""
     if a is None:
@@ -61,27 +53,6 @@ def in_bbox(bb, bboxes) -> int:
     return 0
 
 
-def intersects_bboxes(rect, bboxes) -> bool:
-    """True if rect intersects any bbox (layout.py:274-279)."""
-    for bbox in bboxes:
-        if not is_empty(intersect(rect, bbox)):
-            return True
-    return False
-
-
-def _can_extend(temp, bb, bboxlist, vert_bboxes) -> bool:
-    """Exact replica of the reference's can_extend (layout.py:155-163),
-    including its quirk of re-testing the vert intersection inside the loop
-    (and vacuously passing when bboxlist is empty)."""
-    for b in bboxlist:
-        if (not intersects_bboxes(temp, vert_bboxes)) and (
-            b is None or b == bb or is_empty(intersect(temp, b))
-        ):
-            continue
-        return False
-    return True
-
-
 def column_boxes(page, header_margin: float = 50, footer_margin: float = 50, no_image_text: bool = True):
     """Multi-column detection for one page (reference layout.py:140-272).
 
@@ -95,10 +66,10 @@ def column_boxes(page, header_margin: float = 50, footer_margin: float = 50, no_
     Python in the engine), so the rect algebra is inlined — containment /
     union / floor-ceil without per-rect function calls — and loop
     invariants (the obstacle list, per-candidate backgrounds) are hoisted.
-    Semantics are unchanged and golden-pinned, including _can_extend's
-    vacuous pass on an empty bboxlist (the vert test, a pure function of
-    loop-invariant rects, is evaluated lazily once instead of per
-    neighbor — same decisions).
+    Semantics are unchanged and golden-pinned, including the reference
+    can_extend's vacuous pass on an empty bboxlist (layout.py:155-163; the
+    vert test, a pure function of loop-invariant rects, is evaluated lazily
+    once instead of per neighbor — same decisions).
     """
     clip_y0 = 0.0 + header_margin
     clip_y1 = page.h - footer_margin
@@ -186,7 +157,7 @@ def column_boxes(page, header_margin: float = 50, footer_margin: float = 50, no_
         t0, t1, t3 = bb[0], bb[1], bb[3]
         hit = False
         for o in obstacles:
-            # not is_empty(intersect(temp, o)) with temp=(t0,t1,width,t3)
+            # temp & o is not empty, with temp=(t0,t1,width,t3)
             if (
                 (t0 if t0 > o[0] else o[0]) < (width if width < o[2] else o[2])
                 and (t1 if t1 > o[1] else o[1]) < (t3 if t3 < o[3] else o[3])
@@ -195,7 +166,7 @@ def column_boxes(page, header_margin: float = 50, footer_margin: float = 50, no_
                 break
         if hit:
             continue
-        # _can_extend(temp, bb, bboxes, vert_bboxes): the vert test is a
+        # can_extend(temp, bb, bboxes, vert_bboxes): the vert test is a
         # pure function of temp — evaluate once, lazily (vacuous pass on
         # empty bboxlist preserved: nothing is evaluated then)
         iv = None

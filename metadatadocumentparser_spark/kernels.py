@@ -2,8 +2,9 @@
 
 ``mapInArrow`` over transcript rows: each Arrow batch of turns is parsed
 structurally (payload → blocks/images/tables/meta/segments with char
-spans) and encoded straight to a ``pa.RecordBatch`` against the derived
-Arrow schema — one output row per turn. Everything downstream
+spans) and docparse's records are encoded as they are to a
+``pa.RecordBatch`` against the derived Arrow schema, which selects the
+fields it declares — one output row per turn. Everything downstream
 (classification, formula scoring, LaTeX, boilerplate tree, ordering,
 indexes) is native Catalyst on the exploded arrays.
 
@@ -17,8 +18,6 @@ Scale notes:
 """
 
 from __future__ import annotations
-
-import inspect
 
 from . import docparse, htmlseg
 
@@ -66,8 +65,9 @@ PARSED_DDL = ", ".join(
 )
 
 
-def _turn_record(conv_id, turn_idx, role, tool, ts, text, parse_kwargs) -> dict:
-    """Parse ONE turn into the output-row dict.
+def _turn_record(conv_id, turn_idx, role, tool, ts, text, flags) -> dict:
+    """Parse ONE turn into its output row; docparse's and htmlseg's dicts
+    go in as they are (from_pylist reads only the schema's fields).
     Returns None for a row with no usable (conv_id, turn_idx) key — the
     schema allows NULLs there, and int(None) would otherwise kill the
     whole task (r5 review), violating the engine's never-fail-the-document
@@ -76,27 +76,8 @@ def _turn_record(conv_id, turn_idx, role, tool, ts, text, parse_kwargs) -> dict:
     if conv_id is None or turn_idx is None:
         return None
     text = text if isinstance(text, str) else ""
-    parsed = docparse.parse_turn(text, **parse_kwargs)
-    is_html = parsed["html"] is not None
-    html_raw = parsed["html"] if is_html else None
-    if is_html:
-        segments = [
-            {
-                "seg_idx": s["seg_idx"],
-                "text": s["text"],
-                "start": s["start"],
-                "end": s["end"],
-                "tag_path": s["tag_path"],
-                "words": s["words"],
-                "link_density": s["link_density"],
-                "boiler_container": s["boiler_container"],
-            }
-            for s in htmlseg.segment_html(parsed["html"], parsed["html_start"])
-        ]
-        column_layout = None
-    else:
-        segments = []
-        column_layout = parsed["column_layout"]
+    parsed = docparse.parse_turn(text, **flags)
+    html = parsed["html"]
     m = parsed["meta"]
     return {
         "conv_id": conv_id,
@@ -104,51 +85,34 @@ def _turn_record(conv_id, turn_idx, role, tool, ts, text, parse_kwargs) -> dict:
         "role": role,
         "tool": tool,
         "ts": ts,
-        "html_raw": html_raw,
-        "is_html": is_html,
+        "html_raw": html,
+        "is_html": html is not None,
         "meta": {
-            **{k: m[k] for k in (
-                "title", "author", "subject", "creator", "producer",
-                "creation_date", "modification_date", "num_pages", "file_size",
-            )},
-            "page_sizes": [
-                {"width": p[0], "height": p[1]} for p in m["page_sizes"]
-            ],
+            **m,
+            "page_sizes": [{"width": w, "height": h} for w, h in m["page_sizes"]],
         },
-        "column_layout": column_layout,
-        "blocks": [
-            {
-                "block_idx": b["block_idx"],
-                "page_num": b["page_num"],
-                "bbox": b["bbox"],
-                "text": b["text"],
-                "font_size": b["font_size"],
-                "font_name": b["font_name"],
-                "needs_classify": b["needs_classify"],
-                "page_height": b["page_height"],
-                "span_start": b["span_start"],
-                "span_end": b["span_end"],
-            }
-            for b in parsed["blocks"]
-        ],
+        "column_layout": None if html is not None else parsed["column_layout"],
+        "blocks": parsed["blocks"],
         "images": parsed["images"],
         "tables": parsed["tables"],
-        "segments": segments,
+        "segments": (
+            htmlseg.segment_html(html, parsed["html_start"]) if html is not None else []
+        ),
     }
 
 
 def make_parse_kernel_arrow(arrow_schema, **flags):
-    """The mapInArrow function for the given parse flags (docparse.parse_turn
-    keywords — the reference parse() kwargs, parser.py:56-68). Records are
-    encoded straight to a pa.RecordBatch against the pre-derived schema
-    (derive it where the session lives, with
-    pyspark.sql.pandas.types.to_arrow_schema — executors have no session).
-    Flags are plain closure values — they select code paths once per
-    batch, never per row; an unknown flag raises here, before any task
-    runs."""
+    """The mapInArrow function for the given parse flags (docparse.parse_doc
+    keywords — the reference parse() kwargs, parser.py:56-68). docparse's
+    records are encoded as they are to a pa.RecordBatch against the
+    pre-derived schema, which selects the fields (derive it where the
+    session lives, with pyspark.sql.pandas.types.to_arrow_schema —
+    executors have no session). Flags are plain closure values — they
+    select code paths once per batch, never per row; an unknown flag raises
+    here, before any task runs."""
     import pyarrow as pa
 
-    inspect.signature(docparse.parse_turn).bind("", **flags)
+    docparse.parse_flags(**flags)
     in_cols = ("conv_id", "turn_idx", "role", "tool", "ts", "text")
 
     def kernel(batches):

@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 K = 8          # k-gram length
 W = 16         # winnowing window
 BASE = np.uint64(1000003)
-MASK = np.uint64(0xFFFFFFFFFFFFFFFF)
 # Document-frequency cap for the overlap self-join (r6, the dedup.py
 # MAX_SHINGLE_DF pattern): a fingerprint surviving winnowing in N docs
 # (license headers, boilerplate) emits O(N²) candidate rows. Fingerprints

@@ -143,34 +143,10 @@ def html_meta(text: str):
 
 
 # ---------------------------------------------------------------- per-turn
-def oracle_turn(
-    conv_id: str,
-    turn_idx: int,
-    text: str,
-    text_method: str = "pymupdf",
-    layout_aware: bool = True,
-    column_aware: bool = True,
-    strict_mode: bool = False,
-    header_margin: float = 50,
-    footer_margin: float = 50,
-    table_method: str = "camelot",
-    extract_text: bool = True,
-    extract_images_flag: bool = True,
-    extract_tables_flag: bool = True,
-):
-    """Golden output for one turn: dict of output-table rows."""
-    parsed = docparse.parse_turn(
-        text,
-        text_method=text_method,
-        layout_aware=layout_aware,
-        column_aware=column_aware,
-        header_margin=header_margin,
-        footer_margin=footer_margin,
-        table_method=table_method,
-        extract_text=extract_text,
-        extract_images_flag=extract_images_flag,
-        extract_tables_flag=extract_tables_flag,
-    )
+def oracle_turn(conv_id: str, turn_idx: int, text: str, strict_mode: bool = False, **flags):
+    """Golden output for one turn: dict of output-table rows. ``flags`` are
+    docparse.parse_doc's keywords (the parse flags)."""
+    parsed = docparse.parse_turn(text, **flags)
     key = {"conv_id": conv_id, "turn_idx": turn_idx}
     out = {"turns": [], "blocks": [], "formulas": [], "images": [], "tables": [], "meta": [], "segments": []}
 

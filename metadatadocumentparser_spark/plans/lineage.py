@@ -13,7 +13,10 @@ Mechanics (Iceberg-snapshot semantics emulated over plain parquet):
   (write-then-commit: a crash between the two leaves a bucket uncommitted
   and it is simply redone — output writes are idempotent overwrites);
 - a rerun over the same input snapshot reads the lineage table first and
-  anti-joins the bucket work-list: committed buckets are never recomputed.
+  anti-joins the bucket work-list: committed buckets are never recomputed;
+- each lineage row records its run layout (bucket count + parse flags): a
+  rerun with another layout would re-split the turns or parse them
+  differently, so it is refused before any write.
 """
 
 from __future__ import annotations
@@ -26,11 +29,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..docparse import parse_flags
 from .pipeline import parse_transcripts, turns_of
 
 LINEAGE_DDL = (
     "bucket int, input_snapshot string, rows_in bigint, rows_out bigint, "
-    "metrics string, committed_at double"
+    "metrics string, committed_at double, layout string"
 )
 
 
@@ -48,18 +52,26 @@ def input_snapshot_id(spark: SparkSession, input_path: str) -> str:
     return hashlib.md5("|".join(files).encode()).hexdigest()
 
 
-def committed_buckets(spark: SparkSession, out_dir: str, snapshot: str) -> set:
+def committed_buckets(spark: SparkSession, out_dir: str, snapshot: str, layout: str) -> set:
+    """Buckets committed over this input snapshot. Raises ValueError when
+    the lineage table holds a row of another run layout, or of none (a row
+    written before layouts were recorded)."""
     lpath = os.path.join(out_dir, "_lineage")
     if not os.path.exists(lpath):
         return set()
     rows = (
         spark.read.schema(LINEAGE_DDL)
         .parquet(lpath)
-        .where(F.col("input_snapshot") == snapshot)
-        .select("bucket")
+        .select("bucket", "input_snapshot", "layout")
         .collect()
     )
-    return {r.bucket for r in rows}
+    other = {r.layout for r in rows} - {layout}
+    if other:
+        raise ValueError(
+            f"{lpath} holds rows of run layout {sorted(map(str, other))}, not "
+            f"{layout}: resume with the same n_buckets and parse flags"
+        )
+    return {r.bucket for r in rows if r.input_snapshot == snapshot}
 
 
 def run_with_lineage(
@@ -71,9 +83,12 @@ def run_with_lineage(
     **parse_kwargs,
 ) -> dict:
     """Process (or resume) an extraction run. max_buckets simulates a
-    mid-job kill after that many newly-committed buckets (for tests)."""
+    mid-job kill after that many newly-committed buckets (for tests). A
+    resume must repeat n_buckets and the parse flags (parse_doc's defaults
+    count as given); otherwise it raises ValueError before any write."""
     snapshot = input_snapshot_id(spark, input_path)
-    done = committed_buckets(spark, out_dir, snapshot)
+    layout = json.dumps({"n_buckets": n_buckets, **parse_flags(**parse_kwargs)}, sort_keys=True)
+    done = committed_buckets(spark, out_dir, snapshot, layout)
     df = spark.read.parquet(input_path)
     bucket_col = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_buckets)).cast("int")
 
@@ -97,6 +112,7 @@ def run_with_lineage(
                 rows_out,
                 json.dumps({"run": str(uuid.uuid4())[:8]}),
                 time.time(),
+                layout,
             )
         ]
         spark.createDataFrame(lineage_row, LINEAGE_DDL).write.mode("append").parquet(

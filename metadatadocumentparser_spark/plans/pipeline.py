@@ -40,19 +40,14 @@ _META_FIELDS = (
 
 def parse_transcripts(
     df: DataFrame,
-    text_method: str = "pymupdf",
-    layout_aware: bool = True,
-    column_aware: bool = True,
-    header_margin: float = 50,
-    footer_margin: float = 50,
-    table_method: str = "camelot",
-    extract_text: bool = True,
-    extract_images_flag: bool = True,
-    extract_tables_flag: bool = True,
     num_partitions: int | None = None,
     repartition: str | bool = "auto",
+    **flags,
 ) -> DataFrame:
     """Raw transcripts → parsed nested rows (kernel output).
+
+    ``flags`` are docparse.parse_doc's keywords (the parse flags); an
+    unknown one raises here, on the driver.
 
     repartition:
       - "auto" (default): repartition on (conv_id, turn_idx) only when the
@@ -78,17 +73,6 @@ def parse_transcripts(
         )
     ):
         df = df.repartition(want, *_TURN_KEY)
-    kw = dict(
-        text_method=text_method,
-        layout_aware=layout_aware,
-        column_aware=column_aware,
-        header_margin=header_margin,
-        footer_margin=footer_margin,
-        table_method=table_method,
-        extract_text=extract_text,
-        extract_images_flag=extract_images_flag,
-        extract_tables_flag=extract_tables_flag,
-    )
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
 
@@ -96,7 +80,7 @@ def parse_transcripts(
     # over it — executors cannot parse DDL
     arrow_schema = to_arrow_schema(StructType.fromDDL(PARSED_DDL))
     return df.mapInArrow(
-        make_parse_kernel_arrow(arrow_schema, **kw), schema=PARSED_DDL
+        make_parse_kernel_arrow(arrow_schema, **flags), schema=PARSED_DDL
     )
 
 

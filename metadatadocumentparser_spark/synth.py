@@ -333,10 +333,6 @@ def conv_sizes(n_convs: int, hot_factor: int = 100) -> list:
     return sizes
 
 
-def total_turns(n_convs: int, hot_factor: int = 100) -> int:
-    return sum(conv_sizes(n_convs, hot_factor))
-
-
 def synth_local(n_convs: int, hot_factor: int = 100) -> list:
     rows = []
     for ci, sz in enumerate(conv_sizes(n_convs, hot_factor)):

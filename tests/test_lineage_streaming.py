@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from metadatadocumentparser_spark import synth
 from metadatadocumentparser_spark.plans import extract_all, parse_transcripts, turns_of
 from metadatadocumentparser_spark.plans.lineage import (
+    input_snapshot_id,
     read_output,
     run_with_lineage,
 )
@@ -52,6 +53,64 @@ def test_resume_skips_committed_and_output_identical(spark, tmp_path):
     # byte-identical to a direct single-pass run
     direct = turns_of(parse_transcripts(spark.read.parquet(corpus)))
     assert _sorted_turns(read_output(spark, out)) == _sorted_turns(direct)
+
+
+def _committed_state(spark, out):
+    """(lineage rows, bucket dirs) of a lineage output dir."""
+    rows = spark.read.parquet(os.path.join(out, "_lineage")).count()
+    return rows, sorted(os.listdir(os.path.join(out, "turns")))
+
+
+def test_resume_with_other_bucket_count_refused(spark, tmp_path):
+    """A resume that re-splits the turns would skip or mix buckets: it is
+    refused before any write."""
+    corpus = str(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    _write_corpus(spark, corpus)
+    run_with_lineage(spark, corpus, out, n_buckets=4, max_buckets=2)
+    before = _committed_state(spark, out)
+    with pytest.raises(ValueError, match="n_buckets"):
+        run_with_lineage(spark, corpus, out, n_buckets=2)
+    assert _committed_state(spark, out) == before
+
+
+def test_resume_with_other_parse_flags_refused(spark, tmp_path):
+    corpus = str(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    _write_corpus(spark, corpus)
+    run_with_lineage(spark, corpus, out, n_buckets=3, max_buckets=1)
+    before = _committed_state(spark, out)
+    with pytest.raises(ValueError, match="parse flags"):
+        run_with_lineage(spark, corpus, out, n_buckets=3, text_method="pdfplumber")
+    assert _committed_state(spark, out) == before
+
+
+def test_resume_over_rows_without_layout_refused(spark, tmp_path):
+    """A lineage row written before layouts were recorded cannot be matched
+    to this run's layout, so a resume over it is refused."""
+    corpus = str(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    _write_corpus(spark, corpus)
+    old_ddl = (
+        "bucket int, input_snapshot string, rows_in bigint, rows_out bigint, "
+        "metrics string, committed_at double"
+    )
+    row = (0, input_snapshot_id(spark, corpus), 1, 1, "{}", 0.0)
+    spark.createDataFrame([row], old_ddl).write.parquet(os.path.join(out, "_lineage"))
+    with pytest.raises(ValueError, match="None"):
+        run_with_lineage(spark, corpus, out, n_buckets=3)
+    assert not os.path.exists(os.path.join(out, "turns"))
+
+
+def test_resume_with_default_flag_spelled_out(spark, tmp_path):
+    """parse_doc's defaults count as given: naming one resumes the run."""
+    corpus = str(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    _write_corpus(spark, corpus)
+    r1 = run_with_lineage(spark, corpus, out, n_buckets=3, max_buckets=1)
+    r2 = run_with_lineage(spark, corpus, out, n_buckets=3, text_method="pymupdf")
+    assert r2["skipped"] == r1["processed"] and r2["complete"]
+    assert len(r2["processed"]) == 2
 
 
 def test_streaming_matches_batch(spark, tmp_path):
