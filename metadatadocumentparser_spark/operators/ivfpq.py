@@ -250,7 +250,7 @@ def ivfpq_topk_rerank(
     """Two-stage IVF-PQ search: ADC shortlist over probed lists, exact
     cosine rerank fetching floats for |q|×shortlist rows only. Same
     output contract as similarity.cosine_topk."""
-    from .similarity import _dot, _norm
+    from .similarity import cosine_expr
 
     cand = ivfpq_topk(
         index, queries, id_col=id_col, vec_col=vec_col, k=shortlist, n_probe=n_probe
@@ -263,11 +263,7 @@ def ivfpq_topk_rerank(
         .select(
             "qid",
             "nid",
-            F.round(
-                _dot(F.col("qv"), F.col("nv"))
-                / (_norm(F.col("qv")) * _norm(F.col("nv"))),
-                4,
-            ).alias("cosine"),
+            cosine_expr(F.col("qv"), F.col("nv")).alias("cosine"),
         )
     )
     w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("nid"))

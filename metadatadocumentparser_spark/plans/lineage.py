@@ -24,12 +24,13 @@ from __future__ import annotations
 import json
 import os
 import time
+import typing
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..docparse import parse_flags
+from ..docparse import parse_doc, parse_flags
 from .pipeline import parse_transcripts, turns_of
 
 LINEAGE_DDL = (
@@ -52,6 +53,26 @@ def input_snapshot_id(spark: SparkSession, input_path: str) -> str:
     return hashlib.md5("|".join(files).encode()).hexdigest()
 
 
+def _run_layout(n_buckets: int, **flags) -> str:
+    """The run layout as JSON text: the bucket count and every parse flag,
+    each coerced to parse_doc's annotated type, so that a margin of 50 and
+    one of 50.0 are one layout."""
+    types = typing.get_type_hints(parse_doc)
+    coerced = {k: types[k](v) for k, v in parse_flags(**flags).items()}
+    return json.dumps({"n_buckets": int(n_buckets), **coerced}, sort_keys=True)
+
+
+def _normalized(layout):
+    """A stored layout re-spelled by _run_layout (rows written before the
+    coercion hold the flags as given); one that does not parse as a layout
+    (None, a future flag) is kept as stored."""
+    try:
+        flags = json.loads(layout)
+        return _run_layout(flags.pop("n_buckets"), **flags)
+    except (TypeError, ValueError, KeyError):
+        return layout
+
+
 def committed_buckets(spark: SparkSession, out_dir: str, snapshot: str, layout: str) -> set:
     """Buckets committed over this input snapshot. Raises ValueError when
     the lineage table holds a row of another run layout, or of none (a row
@@ -65,7 +86,7 @@ def committed_buckets(spark: SparkSession, out_dir: str, snapshot: str, layout: 
         .select("bucket", "input_snapshot", "layout")
         .collect()
     )
-    other = {r.layout for r in rows} - {layout}
+    other = {_normalized(r.layout) for r in rows} - {layout}
     if other:
         raise ValueError(
             f"{lpath} holds rows of run layout {sorted(map(str, other))}, not "
@@ -85,9 +106,11 @@ def run_with_lineage(
     """Process (or resume) an extraction run. max_buckets simulates a
     mid-job kill after that many newly-committed buckets (for tests). A
     resume must repeat n_buckets and the parse flags (parse_doc's defaults
-    count as given); otherwise it raises ValueError before any write."""
+    count as given, and a flag compares by parse_doc's annotated type, so
+    ``header_margin=50.0`` is the default 50); otherwise it raises
+    ValueError before any write."""
     snapshot = input_snapshot_id(spark, input_path)
-    layout = json.dumps({"n_buckets": n_buckets, **parse_flags(**parse_kwargs)}, sort_keys=True)
+    layout = _run_layout(n_buckets, **parse_kwargs)
     done = committed_buckets(spark, out_dir, snapshot, layout)
     df = spark.read.parquet(input_path)
     bucket_col = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(n_buckets)).cast("int")

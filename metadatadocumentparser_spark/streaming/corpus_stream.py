@@ -354,8 +354,6 @@ def make_batch_processor(
             _dedup.connected_components(intra)
             .where(F.col("id") != F.col("label"))
             .select("id")
-            if not intra.isEmpty()
-            else intra.select(F.col("id_a").alias("id"))
         )
         dropped = cross_matched.unionByName(non_keepers).distinct()
         survivors = rebuilt.join(

@@ -393,7 +393,18 @@ def test_zero_vector_never_outranks(spark):
     """r5 review: a zero-norm embedding used to yield NaN cosine, which
     Spark orders as the LARGEST double — rank-1 for every query and a
     bogus pass of every >= threshold filter. With the guarded
-    cosine_expr the zero vector sorts last (NULL) and emits no pairs."""
+    cosine_expr the zero vector sorts last (NULL) and emits no pairs.
+    The PQ and IVF-PQ exact reranks score their shortlists the same way
+    (an unguarded rerank raised DIVIDE_BY_ZERO under ANSI mode)."""
+    from metadatadocumentparser_spark.operators.ivfpq import (
+        ivfpq_build,
+        ivfpq_topk_rerank,
+    )
+    from metadatadocumentparser_spark.operators.pq import (
+        pq_encode,
+        pq_fit,
+        pq_topk_rerank,
+    )
     from metadatadocumentparser_spark.operators.similarity import (
         cosine_topk,
         embedding_near_dup_pairs,
@@ -402,12 +413,21 @@ def test_zero_vector_never_outranks(spark):
     rows = [(i, [float((i * 7 + d * 3) % 11 - 5) for d in range(8)]) for i in range(9)]
     rows.append((9, [0.0] * 8))  # the padding row
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    top = cosine_topk(emb, emb.where(F.col("vec_id") < 3), k=3)
+    queries = emb.where(F.col("vec_id") < 3)
+    top = cosine_topk(emb, queries, k=3)
     assert 9 not in {r.nid for r in top.collect()}
     pairs = embedding_near_dup_pairs(
         emb, threshold=-1.0, max_ids=10, method="exact"
     )
     assert not any(9 in (r.id_a, r.id_b) for r in pairs.collect())
+
+    # shortlists cover the whole corpus, so the zero row reaches the rerank
+    books = pq_fit(emb, m=2, k=4, max_iter=2)
+    pq_top = pq_topk_rerank(pq_encode(emb, books), emb, queries, books, k=3).collect()
+    assert len(pq_top) == 9 and 9 not in {r.nid for r in pq_top}
+    idx = ivfpq_build(emb, n_list=2, m=2, k=4, max_iter=2)
+    ivfpq_top = ivfpq_topk_rerank(idx, emb, queries, k=3, n_probe=2).collect()
+    assert len(ivfpq_top) == 9 and 9 not in {r.nid for r in ivfpq_top}
 
 
 def test_ivf_probe_clamp_and_empty_corpus(spark):

@@ -113,6 +113,39 @@ def test_resume_with_default_flag_spelled_out(spark, tmp_path):
     assert len(r2["processed"]) == 2
 
 
+@pytest.mark.parametrize("flag", [{"header_margin": 50.0}, {"footer_margin": 50}])
+def test_resume_with_float_spelled_default(spark, tmp_path, flag):
+    """A flag compares by parse_doc's annotated type: a margin of 50.0 is
+    the default 50, so the resume skips the committed buckets."""
+    corpus = str(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    _write_corpus(spark, corpus)
+    r1 = run_with_lineage(spark, corpus, out, n_buckets=3, max_buckets=1)
+    r2 = run_with_lineage(spark, corpus, out, n_buckets=3, **flag)
+    assert r2["skipped"] == r1["processed"] and r2["complete"]
+    assert len(r2["processed"]) == 2
+
+
+def test_resume_over_uncoerced_layout_rows(spark, tmp_path):
+    """Rows whose layout holds the flags as given (the defaults' int
+    margins) still resume: stored layouts are compared after the same
+    coercion."""
+    import json
+
+    from metadatadocumentparser_spark.docparse import parse_flags
+    from metadatadocumentparser_spark.plans.lineage import LINEAGE_DDL
+
+    corpus = str(tmp_path / "corpus")
+    out = str(tmp_path / "out")
+    _write_corpus(spark, corpus)
+    layout = json.dumps({"n_buckets": 3, **parse_flags()}, sort_keys=True)
+    assert '"header_margin": 50,' in layout
+    row = (0, input_snapshot_id(spark, corpus), 1, 1, "{}", 0.0, layout)
+    spark.createDataFrame([row], LINEAGE_DDL).write.parquet(os.path.join(out, "_lineage"))
+    r = run_with_lineage(spark, corpus, out, n_buckets=3, header_margin=50.0)
+    assert r["skipped"] == [0] and r["processed"] == [1, 2] and r["complete"]
+
+
 def test_streaming_matches_batch(spark, tmp_path):
     from metadatadocumentparser_spark.streaming import extract_stream
 

@@ -338,20 +338,33 @@ def test_hyperplane_bucket_matches_unrolled_and_scales(spark):
     assert len(rows) == 3 and all(r.b is not None for r in rows)
 
 
+def _cc_rows(pairs, limit, **kw):
+    """connected_components(pairs, **kw) collected with dedup's one-task
+    edge limit patched to ``limit``: 0 runs star rounds to the end, None
+    keeps the module's limit (one task for every graph in these tests)."""
+    from metadatadocumentparser_spark.operators import dedup
+
+    with pytest.MonkeyPatch.context() as mp:
+        if limit is not None:
+            mp.setattr(dedup, "_LOCAL_MAX_EDGES", limit)
+        return dedup.connected_components(pairs, **kw).collect()
+
+
 def test_connected_components_long_chain(spark):
     """Large-star/small-star converges in O(log diameter) rounds: a
     200-node chain (diameter 199 ≫ 25 — label propagation would need 199
     rounds and raise) must fully converge to one component labeled by the
     minimum id, plus correct labels on a disjoint triangle."""
-    from metadatadocumentparser_spark.operators.dedup import connected_components
-
     chain = [(i, i + 1) for i in range(5, 205)]           # one long path
     tri = [(1000, 1001), (1001, 1002), (1000, 1002)]      # separate component
     pairs = spark.createDataFrame(chain + tri, "id_a int, id_b int")
-    got = {r.id: r.label for r in connected_components(pairs, max_iter=25).collect()}
-    assert {got[i] for i in range(5, 206)} == {5}
-    assert {got[i] for i in (1000, 1001, 1002)} == {1000}
-    assert len(got) == 201 + 3
+    # star rounds to the end; one round (203 edges -> a 202-edge forest,
+    # not yet a star forest) then one task; one task from the start
+    for limit in (0, 202, None):
+        got = {r.id: r.label for r in _cc_rows(pairs, limit, max_iter=25)}
+        assert {got[i] for i in range(5, 206)} == {5}, limit
+        assert {got[i] for i in (1000, 1001, 1002)} == {1000}, limit
+        assert len(got) == 201 + 3, limit
 
 
 def _union_find_labels(edges):
@@ -390,16 +403,15 @@ _CC_GRAPHS = st.lists(
 @example(edges=[(1, 2), (2, 1), (1, 2), (3, 3), (3, 4), (5, 5)])  # dups, self-loops
 @given(edges=_CC_GRAPHS)
 def test_connected_components_matches_union_find(spark, edges):
-    """Star-forest stop == union-find components labeled by the minimum,
-    on chains, stars, cycles, duplicate/reversed edges, self-loops and
-    the empty input."""
-    from metadatadocumentparser_spark.operators.dedup import connected_components
-
+    """Both regimes == union-find components labeled by the minimum, on
+    chains, stars, cycles, duplicate/reversed edges, self-loops and the
+    empty input: the star rounds' star-forest stop, and the one task."""
     pairs = spark.createDataFrame(edges, "id_a int, id_b int")
-    rows = connected_components(pairs).collect()
-    got = {r.id: r.label for r in rows}
-    assert len(rows) == len(got)  # one row per node
-    assert got == _union_find_labels(edges)
+    for limit in (0, None):
+        rows = _cc_rows(pairs, limit)
+        got = {r.id: r.label for r in rows}
+        assert len(rows) == len(got), limit  # one row per node
+        assert got == _union_find_labels(edges), limit
 
 
 def test_connected_components_no_confirmation_round(spark):
@@ -412,6 +424,61 @@ def test_connected_components_no_confirmation_round(spark):
     got = {r.id: r.label for r in connected_components(pairs, max_iter=1).collect()}
     assert got == {1: 1, 2: 1, 3: 3, 4: 3, 10: 10, 11: 10, 12: 10, 13: 10,
                    21: 21, 22: 21, 25: 21}
+
+
+def test_connected_components_regime_by_edge_count(spark, monkeypatch):
+    """The observed distinct edge count picks the regime: at the limit the
+    graph finishes in one task (the checkpoint's jobs plus the consumer's
+    action, <= 3 in all), one edge above it pays star rounds. The count
+    itself costs no job: it is observed during the checkpoint."""
+    from metadatadocumentparser_spark.operators import dedup
+
+    monkeypatch.setattr(dedup, "_LOCAL_MAX_EDGES", 6)
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup("", "")
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # 6 and 7 distinct (id_a, id_b) edges: the duplicate and the
+    # self-loop drop, the reversed copy counts
+    below = [(i, i + 1) for i in range(5)] + [(1, 0), (0, 1), (3, 3)]
+    above = below + [(20, 21)]
+    cc = {}
+    for name, edges in (("below", below), ("above", above)):
+        pairs = spark.createDataFrame(edges, "id_a int, id_b int")
+        result, call_jobs = jobs(f"cc_{name}", lambda: dedup.connected_components(pairs))
+        rows, collect_jobs = jobs(f"cc_{name}_collect", result.collect)
+        assert {r.id: r.label for r in rows} == _union_find_labels(edges), name
+        cc[name] = (call_jobs, collect_jobs)
+    assert sum(cc["below"]) <= 3, cc
+    # a star round is a checkpoint over shuffles plus the star-forest check
+    assert cc["above"][0] >= cc["below"][0] + 2, cc
+
+
+def test_connected_components_empty_and_string_ids(spark):
+    """An empty edge set gives no rows and keeps the id type; in both
+    regimes, string ids elect the same code-point minimum as Python's <,
+    which is Spark's UTF-8 byte order."""
+    empty = spark.createDataFrame([], "id_a int, id_b int")
+    # U+FF5E < U+1D11E by code point and UTF-8 bytes, not by UTF-16 units
+    edges = [("b", "a"), ("a", "A"), ("é", "€"), ("€", "€"), ("𝄞", "～"),
+             ("z", ""), ("aa", "z")]
+    named = spark.createDataFrame(edges, "id_a string, id_b string")
+    from metadatadocumentparser_spark.operators.dedup import connected_components
+
+    # no edges is at or below every limit: one regime
+    out = connected_components(empty)
+    assert out.schema.simpleString() == "struct<id:int,label:int>"
+    assert out.collect() == []
+    for limit in (0, None):
+        rows = _cc_rows(named, limit)
+        assert len(rows) == len({r.id for r in rows}), limit
+        assert {r.id: r.label for r in rows} == _union_find_labels(edges), limit
 
 
 def _ref_shingles(text, k):
