@@ -434,22 +434,25 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
     result of the checkpoint job, so the size test costs no Spark job):
 
     - At most ``_LOCAL_MAX_EDGES`` edges: ONE union-find over the
-      checkpointed edges in one task (``_union_find``). A star round's
-      cost is per-job overhead, not data — each round is a checkpoint
-      plus a star-forest check, ~25-35 ms per job on a 4-core host — so
-      the benchmark's 553 candidate pairs took 25 jobs over star rounds
-      and take 3 this way, counting the consumer's action.
+      checkpointed edges in one task (``_union_find``). On small graphs a
+      star round's cost is per-job overhead, not data: each round is a
+      checkpoint plus a star-forest check.
     - Above it: ALTERNATING LARGE-STAR / SMALL-STAR rounds (Kiveris et
       al. 2014) until the edges are a star forest or drop to the limit.
       Min-label propagation needs O(diameter) full edge-join rounds —
       degenerate on a chain; star contraction converges in O(log
       diameter) rounds, each two key-shuffles over the shrinking edge set.
 
-    How the limit was set: on a 4-core host, over 1M random edges (864k
-    nodes) the one task took 3.2-4.9 s against 22-34 s of star rounds,
-    and over 100k edges 0.8 s against 6.8 s. It is not raised further:
-    the one task is serial and holds a dict over every node in one Python
-    worker, while star rounds spread over a cluster's cores.
+    The limit is a memory bound. The one task holds a dict over every
+    node in one Python worker, and its peak grows linearly with the
+    edges. The worst case measured was 21-character string ids with two
+    new nodes per edge, at about 390 bytes per edge. At 1M edges that
+    worker peaked at 478 MB RSS, under the 512 MiB Spark assumes per
+    Python worker by default (``spark.python.worker.memory``). Star
+    rounds serve graphs above the limit because the one task would
+    outgrow its worker there, not for speed: that they are faster on any
+    graph is not measured, and on a 4-core host the one task was faster
+    at every size tried, up to 1M edges.
 
     Star-forest stop (star path only): the first round whose edges form a
     STAR FOREST (every u has exactly one out-edge, no node is both a u

@@ -426,6 +426,16 @@ def test_connected_components_no_confirmation_round(spark):
                    21: 21, 22: 21, 25: 21}
 
 
+def test_connected_components_no_confirmation_round_star_rounds(spark):
+    """The same graph with the one-task limit at 0, so max_iter=1 runs one
+    star round: the star-forest stop must end it without a second round."""
+    edges = [(1, 2), (3, 4), (10, 11), (10, 12), (10, 13), (25, 21), (25, 22)]
+    pairs = spark.createDataFrame(edges, "id_a int, id_b int")
+    got = {r.id: r.label for r in _cc_rows(pairs, 0, max_iter=1)}
+    assert got == {1: 1, 2: 1, 3: 3, 4: 3, 10: 10, 11: 10, 12: 10, 13: 10,
+                   21: 21, 22: 21, 25: 21}
+
+
 def test_connected_components_regime_by_edge_count(spark, monkeypatch):
     """The observed distinct edge count picks the regime: at the limit the
     graph finishes in one task (the checkpoint's jobs plus the consumer's
